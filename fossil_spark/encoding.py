@@ -39,9 +39,10 @@ an array member consumes exactly its declared element count.
 from __future__ import annotations
 
 import json
+import re
 import struct
 
-from fossil_spark.schema import FossilSchema, SchemaError, parse_schema
+from fossil_spark.schema import FossilSchema, SchemaError, datum_value, parse_schema
 
 _FIXED_FMT = {
     # struct format chars, little-endian
@@ -224,9 +225,9 @@ def encode_python(value, schema: FossilSchema | str) -> bytes:
     byte-parity with the reference's raw-data responses."""
     if isinstance(schema, str):
         schema = parse_schema(schema)
+    if isinstance(value, str):  # stored text: read it as Spark does
+        value = datum_value(value, schema)
     if schema.entries:
-        if isinstance(value, str):
-            value = json.loads(value)
         if hasattr(value, "asDict"):  # pyspark Row
             value = value.asDict()
         out = []
@@ -237,8 +238,6 @@ def encode_python(value, schema: FossilSchema | str) -> bytes:
             out.append(member)
         return b"".join(out)
     if schema.array_len is not None:
-        if isinstance(value, str):
-            value = json.loads(value)
         name = _elem_name(schema.text)
         return b"".join(_py_scalar(v, name) for v in value)
     return _py_scalar(value, schema.text)
@@ -411,3 +410,34 @@ def to_storage_text(value) -> str:
     if isinstance(value, bytes):
         return value.decode("utf-8", "replace")
     return str(value)
+
+
+# C0 controls other than whitespace mark a datum as binary: Spark's
+# casts trim them, so a little-endian integer with zero high bytes
+# would otherwise read as a short conforming literal
+_BINARY_MARK = re.compile(r"[\x00-\x08\x0e-\x1f\x7f]")
+
+
+def storage_text(data: bytes, schema: FossilSchema) -> str | None:
+    """A typed topic's APPEND datum as the store keeps it, or None if
+    it conforms neither as text nor as binary.
+
+    Textual first: our text/JSON clients send the literal itself, and a
+    text datum whose UTF-8 length happens to equal the schema's fixed
+    width (e.g. "1234" to an int32 topic) must not be reinterpreted as
+    binary — that's silent corruption. Binary decode is the fallback
+    for reference-parity clients (append_literal, reference
+    pkg/repl/parser.go:55 → pkg/schema/encoding.go); their encodings
+    almost never also read as a conforming literal free of control
+    characters."""
+    from fossil_spark.schema import conforms  # per call, so a wrapper on it applies
+
+    try:
+        text = data.decode("utf-8")
+    except UnicodeDecodeError:
+        text = None
+    if text is not None and not _BINARY_MARK.search(text) and conforms(text, schema):
+        return text
+    if validate_bytes(data, schema):
+        return to_storage_text(decode_python(data, schema))
+    return None

@@ -176,24 +176,14 @@ def _replay_wal(
 
 
 def _storage_text(data: bytes, schema) -> str:
-    """Binary datum -> store text, mirroring the server APPEND path
-    (server.py _Database.append: text-first, then schema decode)."""
-    from fossil_spark.encoding import (
-        decode_python, to_storage_text, validate_bytes,
-    )
-    from fossil_spark.schema import conforms
+    """Binary datum -> store text, as the server's APPEND stores it
+    (encoding.storage_text); a non-conforming datum keeps its text."""
+    from fossil_spark.encoding import storage_text
 
     if schema.text == "string":
         return data.decode("utf-8", "replace")
-    try:
-        text = data.decode("utf-8")
-    except UnicodeDecodeError:
-        text = None
-    if text is not None and conforms(text, schema):
-        return text
-    if validate_bytes(data, schema):
-        return to_storage_text(decode_python(data, schema))
-    return data.decode("utf-8", "replace")
+    value = storage_text(data, schema)
+    return data.decode("utf-8", "replace") if value is None else value
 
 
 def import_reference_db(

@@ -265,39 +265,20 @@ class _Database:
         return self._registry_cache[1]
 
     def append(self, topic: str, data: bytes, flush_every: int) -> None:
-        from fossil_spark.encoding import (
-            decode_python, to_storage_text, validate_bytes,
-        )
-        from fossil_spark.schema import SchemaError, conforms
+        from fossil_spark.encoding import storage_text
+        from fossil_spark.schema import SchemaError
 
         schema = self._registry().get(topic)
         if schema.text == "string":
             value = data.decode("utf-8", "replace")
         else:
-            # Textual first: our text/JSON clients send the literal
-            # itself, and a text datum whose UTF-8 length happens to
-            # equal the schema's fixed width (e.g. "1234" to an int32
-            # topic) must not be reinterpreted as binary — that's
-            # silent corruption. Binary decode is the fallback for
-            # reference-parity clients (append_literal, reference
-            # pkg/repl/parser.go:55 → pkg/schema/encoding.go); their
-            # encodings almost never also read as a conforming literal
-            # (every byte would have to be an ASCII digit).
-            try:
-                text = data.decode("utf-8")
-            except UnicodeDecodeError:
-                text = None
-            if text is not None and conforms(text, schema):
-                value = text
-            elif validate_bytes(data, schema):
-                value = to_storage_text(decode_python(data, schema))
-            else:
+            value = storage_text(data, schema)
+            if value is None:
                 # keep the conforms() gate the reference applies at
                 # append (db.go:486)
-                shown = text if text is not None else data.decode("utf-8", "replace")
                 raise SchemaError(
-                    f"datum {shown!r} does not conform to topic {topic!r} "
-                    f"schema {schema.text!r}"
+                    f"datum {data.decode('utf-8', 'replace')!r} does not conform "
+                    f"to topic {topic!r} schema {schema.text!r}"
                 )
         row = (datetime.now(timezone.utc).replace(tzinfo=None), topic, value)
         with self.lock:

@@ -96,27 +96,26 @@ class EventStore:
             .partitionBy("date").parquet(self.root)
 
     def append_rows(self, rows: list[tuple[datetime, str, str]]) -> None:
-        """Small-batch append (the CLI `append <topic> <data>` path).
-        Datum not conforming to the topic's declared schema are
-        rejected (db.go:486: append-time validation)."""
-        from fossil_spark.schema import SchemaError, validate
+        """Small-batch append (the CLI `append <topic> <data>` path and
+        the server's flush). Datum not conforming to the topic's
+        declared schema are rejected (db.go:486: append-time
+        validation) and nothing is written. The batch is a list on the
+        driver, so every typed datum — WAL-replayed ones too — is
+        checked there with conforms(), one pass and no Spark job; the
+        parquet write is the batch's only job."""
+        from fossil_spark.schema import SchemaError, conforms
 
-        df = self.spark.createDataFrame(rows, "time timestamp, topic string, value string")
         if os.path.exists(self._schema_path):
             reg = self._load_registry()
-            topics = {t for _, t, _ in rows}
-            for t in sorted(topics):
-                schema = reg.get(t)
-                if schema.text == "string":
-                    continue
-                part = validate(df.filter(F.col("topic") == t), schema)
-                bad = part.filter(~F.col("valid")).select("value").limit(1).collect()
-                if bad:
+            schemas = {t: reg.get(t) for t in {t for _, t, _ in rows}}
+            for _, t, value in rows:
+                schema = schemas[t]
+                if schema.text != "string" and not conforms(value, schema):
                     raise SchemaError(
-                        f"datum {bad[0]['value']!r} does not conform to topic "
+                        f"datum {value!r} does not conform to topic "
                         f"{t!r} schema {schema.text!r}"
                     )
-        self.append(df)
+        self.append(self.spark.createDataFrame(rows, "time timestamp, topic string, value string"))
 
     def query_typed(self, text: str, topic: str, now: datetime | None = None) -> DataFrame:
         """Query a topic subtree with its declared schema applied: the

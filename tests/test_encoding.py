@@ -135,6 +135,19 @@ def test_encode_python_matches_encode_literal():
     assert encode_python('{"coords": [1, 2], "type": "click"}', schema) == lit
 
 
+def test_encode_python_reads_stored_text_as_spark_does():
+    # stored datum pass the flush gate in Spark's spelling, which
+    # Python's int()/float()/json.loads do not all read
+    assert encode_python("5d", "float64") == struct.pack("<d", 5.0)
+    assert encode_python("0x1p3", "float64") == struct.pack("<d", 8.0)
+    assert encode_python("1e40", "float32") == struct.pack("<f", float("inf"))
+    assert encode_python("\x005\x7f", "int8") == struct.pack("<b", 5)
+    assert encode_python("[1, 2] trailing", "[2]int32") == struct.pack("<2i", 1, 2)
+    assert encode_python("[+INF, 1]", "[2]float64") == struct.pack("<2d", float("inf"), 1.0)
+    with pytest.raises(SchemaError):
+        encode_python("1_000", "int64")
+
+
 # --- wire round-trip: binary client -> server -> binary client -------------
 
 

@@ -2,7 +2,7 @@
 reference's docs/schema.md semantics)."""
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import given, strategies as st
 from pyspark.sql import types as T
 
 from fossil_spark.schema import (
@@ -171,32 +171,153 @@ def test_conforms_mirrors_validate_semantics():
     assert not conforms('{"s": "x"}', comp)
 
 
-@settings(deadline=None, max_examples=25)
-@given(
-    st.sampled_from(["int8", "int16", "int32", "int64", "uint8", "uint16",
-                     "uint32", "float64", "boolean", "string"]),
-    st.lists(
-        st.one_of(
-            st.integers(-300, 300).map(str),
-            st.floats(-1e6, 1e6, allow_nan=False).map(str),
-            st.sampled_from(["true", "False", "nope", "", "3.5", "-1", "128",
-                             "255", "65536", "hello world"]),
-        ),
-        min_size=1, max_size=8,
-    ),
-)
-def test_conforms_agrees_with_distributed_validate(schema_name, values):
-    # the server's per-datum gate (conforms) and the batch gate
-    # (validate) must accept/reject identically, or the wire path
-    # admits datum the store would reject
-    from fossil_spark.schema import conforms, parse_schema, validate
+# Literals where Python's parsers, Java's and Jackson's disagree: digit
+# separators, other scripts' digits, float suffixes, hex, whitespace and
+# control bytes, signs, special float words, range edges.
+_SCALAR_LITERALS = [
+    "0", "5", "-5", "+5", "-0", "+0", "00", "007", "1_000", "1_0.5", "١٢٣", "٥", "٣.٥",
+    "５", "²", "5d", "5f", "5D", "5F", "5.", "5.0", ".5", "-.5", "3.5", "-0.4", "5.e3",
+    ".e3", "1e3", "1E3", "1e+3", "1e", "e5", "5e", ".", "-", "+", "--5", "5-", "1 2",
+    "1.2.3", "0x10", "0x1p3", "0X1P3", "0x1p3d", "0x1P-2F", "0x1.8p1", "0x.p1", "0x1p",
+    "0b1", "0o7", " 5", "5 ", "\t5\n", "\x005", "5\x7f", "\x7f5", "\xa05", "5\xa0",
+    "\u20035", "5\u2028", " ", "", "NaN", "nan", "-NaN", "+NaN", "-nan", "+nan", "NaNd",
+    "inf", "+inf", "-inf", "Inf", "INF", " inf", "inf ", "\x00inf", "inf\x7f",
+    "Infinity", "-Infinity", "+Infinity", "infinity", "INFINITY", "Infinityd",
+    "1e40", "3.4028236e38", "1e400", "-1e400", "1e-400", "1e309", "9" * 400,
+    "127", "128", "-128", "-129", "255", "256", "32767", "32768", "65535", "65536",
+    "2147483647", "2147483648", "4294967295", "4294967296",
+    "9223372036854775807", "9223372036854775808",
+    "-9223372036854775808", "-9223372036854775809",
+    "18446744073709551615", "18446744073709551616", "100000000000000000000",
+    "true", "false", "True", "FALSE", " true", "true ", "t", "1", "yes",
+]
+_SCALAR_SCHEMAS = ["int8", "int16", "int32", "int64", "uint8", "uint16", "uint32",
+                   "uint64", "float32", "float64", "float", "boolean", "string", "binary"]
+# JSON arrays: token types, Jackson's extra NaN/Infinity spellings,
+# lengths, nulls, single quotes, trailing text
+_ARRAY_LITERALS = [
+    "[1,2]", "[1, 2]", " [1,2] ", "\t\n[1,2]", "[1,2] x", "[1,2]]", "[1,2]\x00",
+    "[1,2] [3]", "[1,2]//c", "\ufeff[1,2]", "\x0b[1,2]", "[1,2,3]", "[1]", "[]", "[1,2,]",
+    "[1.0,2]", "[1.5,2]", "[-0.0,1]", "[1e3,1]", "[1E3,1]", '["1",2]', '["5","6"]',
+    "['1',2]", "[-1,2]", "[-0,1]", "[01,1]", "[200,1]", "[128,1]", "[255,1]", "[256,1]",
+    "[-129,1]", "[2147483648,1]", "[4294967295,1]", "[4294967296,1]",
+    "[9223372036854775807,1]", "[9223372036854775808,1]",
+    "[18446744073709551615,1]", "[18446744073709551616,1]", "[1e400,1]", "[3.5e38,1]",
+    "[NaN,1]", "[Infinity,1]", "[-Infinity,1]", "[+Infinity,1]", "[+INF,1]", "[-INF,1]",
+    "[INF,1]", "[+NaN,1]", "[1,-INFx]", "[1,-INFINITY]", '["NaN",1]', '["Infinity",1]',
+    '["+Infinity",1]', '["+INF",1]', '["-INF",1]', '["inf",1]', '[1, "-INF" ]',
+    '["+5",1]', '["-0","5"]', '["1,000",1]', '["18446744073709551615",1]',
+    '["18446744073709551616",1]', "[true,false]", '["true",false]', "[true,1]",
+    "[null,1]", "[[1],2]", '[{"a":1},2]', '{"a":1}', "1", "null", "",
+]
+_ARRAY_SCHEMAS = ["[2]int8", "[2]uint8", "[2]int32", "[2]uint32", "[2]int64",
+                  "[2]uint64", "[2]float32", "[2]float64", "[2]boolean"]
+# composites: member token types, repeated keys, array members, base64
+_COMPOSITE_LITERALS = [
+    '{"a": 5}', '{"a": "5"}', '{"a": 5.0}', '{"a": 5.5}', '{"a": -1}', '{"a": -0}',
+    '{"a": 128}', '{"a": 200}', '{"a": 300}', '{"a": 1e3}', '{"a": 01}', '{"a":5,}',
+    '{"a": "x"}', '{"a": true}', '{"a": "true"}', '{"a": null}', "{}", '{"b": 1}',
+    '{"A": 5}', "{'a': 5}", '{"a": 5, "b": "x"}', '{"a": 5, "b": 7}', '{"a": 5, "b": null}',
+    '{"a": [1,2]}', '{"a": [1,2,3]}', '{"a": [1,null]}', '{"a": [1,"2"]}', '{"a": "[1,2]"}',
+    '{"a": {"x": 1}}', '{"a": NaN}', '{"a": "NaN"}', '{"a": Infinity}', '{"a": "Infinity"}',
+    '{"a": "inf"}', '{"a": -INF}', '{"a": +INF}', '{"a": "+INF"}', '{"a": "-INF"}',
+    '{"a": "-0"}', '{"a": "007"}', '{"a": " 5"}', '{"a": "5.5"}', '{"a": 1.5e0}',
+    '{"a": 18446744073709551615}', '{"a": 18446744073709551616}',
+    '{"a": "18446744073709551615"}', '{"a": 9223372036854775808}', '{"a": 1e400}',
+    '{"a": 3.5e38}', '{"a": 5, "a": "x"}', '{"a": "x", "a": 5}', '{"a": 5, "a": null}',
+    '{"a": null, "a": 5}', '{"a": 5, "a": 300}', '{"a": 300, "a": 5}', '{"a": 5, "a": 5.5}',
+    '{"a": [1,2], "a": [1,2,3]}', '{"a": [1,2,3], "a": [1,2]}', '{"a": [1,2], "a": 7}',
+    '{"a": [1,2], "a": [1,"x"]}', '{"a": 1, "b": "s", "a": 2}', '{"b": "s", "a": [300, 1]}',
+    '{"a": 5, "b": {"x": [1]}}', '{"a": 5} x', ' {"a": 5} ', '{"a": 5}\x00',
+    '[{"a": 5}]', "[]", "5", "null", "junk", '{"a": "AQID"}', '{"a": "AQI="}',
+    '{"a": "AQI"}', '{"a": "AQ=="}', '{"a": "AQ="}', '{"a": "A QID"}', '{"a": "AQID\\n"}',
+    '{"a": ""}', '{"a": "////"}', '{"a": "-_-_"}', '{"a": "AQ==AQ=="}', '{"a": "AQID "}',
+    '{"a": "AQ\\u003d="}', '{"a": "YR=="}', '{"a": "Y"}', '{"a": "!!"}',
+    '{"a": 1.0E10}', '{"a": 1e-4}', '{"a": -0.0}', '{"a": 1234567.5}', '{"a": 0.001}',
+    '{"a": [1.5, "x", null, true, 2e22]}', '{"a": "é\\n"}', '{"a": {"k": 1, "k": "é"}}',
+]
+_COMPOSITE_SCHEMAS = [
+    '{"a": int8}', '{"a": uint8}', '{"a": int64}', '{"a": uint64}', '{"a": float32}',
+    '{"a": float64}', '{"a": boolean}', '{"a": string}', '{"a": binary}',
+    '{"a": [2]int32}', '{"a": [2]uint64}', '{"a": int32, "b": string}',
+    '{"a": [2]int8, "b": [2]float32}', '{"a": [2]boolean, "b": binary}',
+]
 
-    schema = parse_schema(schema_name)
-    got = [conforms(v, schema) for v in values]
 
-    from fossil_spark.session import get_spark
+def _generated_literals(rng):
+    """Seeded random numbers near the type bounds, written the ways
+    clients write them."""
+    out = []
+    for bound in (0, 1 << 7, 1 << 8, 1 << 15, 1 << 16, 1 << 31, 1 << 32, 1 << 63, 1 << 64):
+        for _ in range(4):
+            n = rng.choice((1, -1)) * (bound + rng.randint(-2, 2))
+            out += [str(n), f"+{n}" if n >= 0 else str(n), f" {n}\t", f"{n}.0"]
+    for _ in range(40):
+        x = rng.uniform(-1e6, 1e6) * 10.0 ** rng.randint(-40, 40)
+        out += [repr(x), f"{x:e}", f"{x:.3f}", f"{x:g}", f"{x}f", float.hex(x)]
+    return out
 
-    spark = get_spark("fossil_spark-tests", shuffle_partitions=8)
-    df = spark.createDataFrame([(v,) for v in values], "value string")
-    want = [r["valid"] for r in validate(df, schema).collect()]
-    assert got == want, f"{schema_name}: conforms={got} validate={want} on {values}"
+
+def test_conforms_agrees_with_distributed_validate(spark):
+    # the driver gate (conforms: server APPEND and every flush) and the
+    # distributed gate (validate: query_typed) must accept and reject
+    # the same datum, or acked data fails the flush or vanishes from
+    # typed queries; one collect over every case
+    import random
+
+    from fossil_spark.schema import conforms, datum_value, parse_schema, validate
+
+    families = [
+        (_SCALAR_SCHEMAS, _SCALAR_LITERALS + _generated_literals(random.Random(7))),
+        (_ARRAY_SCHEMAS, _ARRAY_LITERALS),
+        (_COMPOSITE_SCHEMAS, _COMPOSITE_LITERALS),
+    ]
+    wrong, n = [], 0
+    for names, literals in families:
+        schemas = [parse_schema(s) for s in names]
+        # one verdict and one value column per schema, one row per literal
+        df = spark.createDataFrame([(v,) for v in literals], "value string")
+        for j, schema in enumerate(schemas):
+            df = validate(df, schema).withColumnsRenamed({"valid": f"v{j}", "parsed": f"p{j}"})
+        for r in df.collect():
+            for j, schema in enumerate(schemas):
+                n += 1
+                got = conforms(r["value"], schema)
+                if got != r[f"v{j}"]:
+                    wrong.append((schema.text, r["value"], got, r[f"v{j}"]))
+                elif got and _norm(datum_value(r["value"], schema), schema) != _norm(r[f"p{j}"], schema):
+                    wrong.append((schema.text, r["value"], datum_value(r["value"], schema), r[f"p{j}"]))
+    assert n == sum(len(s) * len(v) for s, v in families)
+    assert not wrong, f"{len(wrong)} of {n} differ (schema, datum, driver, Spark): {wrong[:20]}"
+
+
+def _norm(value, schema):
+    """A parsed value, driver- or Spark-side, in one comparable form."""
+    import struct
+
+    if schema.entries:
+        return tuple(_norm(value[k], sub) for k, sub in schema.entries.items())
+    if schema.element is not None:
+        return tuple(_norm(v, schema.element) for v in value)
+    if schema.text.startswith("float"):
+        return struct.pack("<d", value)  # NaN equals NaN, -0.0 differs from 0.0
+    if schema.text == "binary":
+        return bytes(value.encode() if isinstance(value, str) else value)
+    return value
+
+
+def test_validate_reads_typed_values(spark):
+    # integer members are range-checked after a wide read and cast back
+    # to the declared type; uint64 keeps its full range
+    from decimal import Decimal
+
+    from fossil_spark.schema import parse_schema, validate
+
+    def parsed(schema, values):
+        df = spark.createDataFrame([(v,) for v in values], "value string")
+        return [r["parsed"] for r in validate(df, parse_schema(schema)).collect()]
+
+    assert parsed("[2]int8", ["[1, -128]", "[200, 1]"]) == [[1, -128], None]
+    assert parsed("uint64", [" 18446744073709551615", "3.5"]) == [Decimal(18446744073709551615), None]
+    assert parsed('{"a": uint64, "b": [2]uint8}', ['{"a": 7, "b": [255, 0]}']) == [
+        (Decimal(7), [255, 0])]

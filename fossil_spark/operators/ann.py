@@ -17,7 +17,6 @@
 
 from __future__ import annotations
 
-import collections
 import os
 
 from pyspark.sql import Column, DataFrame
@@ -316,177 +315,9 @@ def _rank_topk(scored: DataFrame, k: int, id_col: str) -> DataFrame:
     )
 
 
-# --- session-scoped result memo + exact-truth catalog -------------------
-#
-# Every retrieval AUDIT (recall@k, NDCG, recall curve, truncation/BQ/
-# two-stage comparisons) consumes the SAME exact brute-force truth —
-# and often the same IVF/LSH/BQ candidate tables. A production
-# evaluation materializes those once per corpus snapshot and joins
-# every audit against them; recomputing the |corpus| x |queries| scan
-# per audit multiplies the most expensive pass in the retrieval suite
-# (r11 verdict #1: 7 keys x ~1 rebuild each = the 100 s heavy child).
-# This is the dedup component-catalog precedent (dedup.py, r7:
-# 30.2 s -> 1.8 s) applied to retrieval: session-scoped, keyed by the
-# input plan's semantic hash PLUS a snapshot of the plan's leaf input
-# files (path, mtime, size — the bench prep_multirg pattern), so
-# rewriting parquet behind a previously-seen plan misses the cache and
-# rebuilds fresh truth instead of serving stale rows. Entries hold the
-# owning session directly (the cached DataFrame already pins it, so a
-# weakref could never die — r12 ADVICE) and a hit is honored only
-# while that session is still live AND the cached schema matches the
-# request: a semanticHash collision between two genuinely different
-# plans falls through to a recompute instead of silently serving the
-# wrong table. Stopped-session entries are swept on the next insert.
-# ann_memo_invalidate() remains for exotic cases (e.g. an in-place
-# rewrite that preserves every file's mtime and size).
-_MEMO_CACHE: collections.OrderedDict = collections.OrderedDict()
-_MEMO_CACHE_MAX = 16
-
-
-def _memo_drop(key) -> None:
-    entry = _MEMO_CACHE.pop(key, None)
-    if entry is not None:
-        try:
-            entry[1].unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to free
-
-
-def _session_live(sess) -> bool:
-    from fossil_spark.operators import session_live
-
-    return session_live(sess)
-
-
-def _files_tag(df: DataFrame) -> str:
-    from fossil_spark.operators import plan_files_tag
-
-    return plan_files_tag(df)
-
-
 def ann_memo_invalidate() -> None:
-    """Unpersist and drop every memoized truth/candidate table (use
-    after rewriting the files behind a previously-seen plan)."""
-    for key in list(_MEMO_CACHE):
-        _memo_drop(key)
-
-
-def memo(df: DataFrame, tag: str = "") -> DataFrame:
-    """Persist-once session memo: the first caller of a semantically
-    identical plan materializes it (MEMORY_AND_DISK); later callers in
-    the same session get the persisted table back and the expensive
-    scan never re-runs. Results are bitwise unchanged — all memoized
-    builders here are deterministic (rounded scores, id tie-breaks).
-    `tag` separates same-plan uses that must not share. Falls back to
-    the raw df for plans that can't semantic-hash."""
-    from pyspark import StorageLevel
-
-    sess = df.sparkSession
-    try:
-        key = (id(sess), tag, df.semanticHash(), _files_tag(df))
-    except Exception:
-        return df
-    cached = _memo_lookup(sess, key, df.schema)
-    if cached is not None:
-        return cached
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _memo_store(sess, key, out)
-    return out
-
-
-def _memo_lookup(sess, key, want_schema) -> DataFrame | None:
-    """Honor a hit only for the live owning session AND when the
-    cached schema matches the request — a 32-bit semanticHash
-    collision between different plans must recompute, not serve
-    wrong rows."""
-    hit = _MEMO_CACHE.get(key)
-    if hit is None:
-        return None
-    owner, cached = hit
-    if owner is sess and _session_live(sess) \
-            and cached.schema == want_schema:
-        _MEMO_CACHE.move_to_end(key)
-        return cached
-    _memo_drop(key)
-    return None
-
-
-def memo_max_bytes() -> int:
-    """Size-admission cap for memo entries, in LEAF INPUT bytes of
-    the candidate plan (no action is run; Catalyst's optimized-plan
-    stats were measured inflating to petabytes through joins even at
-    sf0.1, so leaf bytes are the stable proxy — a memoized table
-    derived from a corpus-scale scan is itself corpus-scale in the
-    worst case). Entries over the cap are not persisted: pinning a
-    corpus-sized signature matrix or pair graph MEMORY_AND_DISK for
-    the whole session is an executor-storage time bomb (r13 verdict
-    #3). Default 8 GiB — far above the sf0.1 inputs (~100 MB), so
-    local behavior is unchanged; set SPARK_GRAFT_MEMO_MAX_BYTES per
-    deployment (e.g. a few % of cluster storage memory)."""
-    return int(
-        os.environ.get("SPARK_GRAFT_MEMO_MAX_BYTES", str(8 * 1024**3))
-    )
-
-
-def _memo_admit(out: DataFrame) -> bool:
-    """True when the plan's leaf input bytes are under the cap.
-    Unknown sizes admit (in-memory/checkpointed plans, estimation
-    failures — preserves pre-cap behavior): the cap exists to stop
-    KNOWN-huge tables, not to disable the memo."""
-    from fossil_spark.operators import plan_input_bytes
-
-    try:
-        est = plan_input_bytes(out)
-    except Exception:
-        return True
-    return est is None or est <= memo_max_bytes()
-
-
-def _memo_store(sess, key, out: DataFrame) -> None:
-    # size-aware admission (r13 verdict #3): never pin a corpus-scale
-    # table for the session; callers persist before storing, so a
-    # rejected entry is unpersisted again (no action ran in between)
-    if not _memo_admit(out):
-        try:
-            out.unpersist()
-        except Exception:
-            pass
-        return
-    # sweep stopped-session entries — they can never hit again and
-    # would crowd live entries out of the 16-slot LRU
-    for stale in [k for k, (s, _) in _MEMO_CACHE.items()
-                  if not _session_live(s)]:
-        _memo_drop(stale)
-    while len(_MEMO_CACHE) >= _MEMO_CACHE_MAX:
-        _memo_drop(next(iter(_MEMO_CACHE)))
-    _MEMO_CACHE[key] = (sess, out)
-
-
-_TRUTH_KMAX = 10  # the largest k any shipped audit asks of the truth
-
-
-def topk_truth(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
-    dim: int | None = None,
-) -> DataFrame:
-    """The exact-truth catalog entry for (corpus, queries): brute
-    force materialized ONCE per session at max(k, 10) and served at
-    any k <= that by a rank filter — cosine_topk's @round_to-rounded
-    scores + id tie-break make ranks deterministic, so the filtered
-    rows ARE the k-truth bitwise (recall_eval@5, ndcg@5 and
-    recall_curve@10 all read the same persisted 10-truth instead of
-    three brute-force passes)."""
-    kmax = max(int(k), _TRUTH_KMAX)
-    t = memo(
-        cosine_topk(corpus, queries, kmax, id_col, vec_col, round_to, dim),
-        tag="truth",
-    )
-    return t.filter(F.col("rank") <= k) if k < kmax else t
+    """No-op, kept only because perfbench/batch_main.py imports it:
+    no operator keeps results across calls."""
 
 
 def filtered_topk(
@@ -829,56 +660,6 @@ def pq_ann(
     vecs = corpus.select(
         F.col(id_col), _unit(F.col(vec_col).cast("array<double>")).alias("__v")
     )
-    qplan = queries.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__qv")
-    )
-    # INPUT-keyed session memo (r13, the kmeans_cluster shape): the
-    # codebook training runs a sample collect + numpy Lloyd and the
-    # query chunking runs toLocalIterator jobs at plan-BUILD time, so
-    # an output-keyed memo() would still pay them per call. Key on
-    # both input plans + every training/scan param BEFORE collecting;
-    # hit requires the live owning session and the exact output
-    # columns (a 32-bit collision must recompute).
-    sess = corpus.sparkSession
-    out_cols = ["query_id", id_col, "cos_sim", "rank"]
-    try:
-        mkey = (
-            id(sess),
-            f"pq:{k}:{m}:{n_cents}:{n_iter}:{rerank_factor}"
-            f":{train_sample}:{q_batch}:{round_to}:{id_col}",
-            vecs.semanticHash(),
-            qplan.semanticHash(),
-            _files_tag(vecs),
-            _files_tag(qplan),
-        )
-    except Exception:
-        mkey = None
-    if mkey is not None:
-        hit = _MEMO_CACHE.get(mkey)
-        if hit is not None:
-            owner, cached = hit
-            # full-schema guard, not just column names (r13 ADVICE):
-            # a semanticHash collision between plans with same-named
-            # but differently-TYPED id columns must recompute
-            # query_id carries the CORPUS id type: the candidate
-            # table's schema types both id fields from corpus, and
-            # the rerank join keeps the candidate side's column
-            want_types = (
-                vecs.schema[id_col].dataType,
-                vecs.schema[id_col].dataType,
-                T.DoubleType(),
-                T.IntegerType(),
-            )
-            if (
-                owner is sess
-                and _session_live(sess)
-                and cached.columns == out_cols
-                and tuple(f.dataType for f in cached.schema.fields)
-                == want_types
-            ):
-                _MEMO_CACHE.move_to_end(mkey)
-                return cached
-            _memo_drop(mkey)
     sample = (
         vecs.withColumn("__h", F.md5(F.col(id_col).cast("string")))
         .orderBy("__h")
@@ -1003,15 +784,9 @@ def pq_ann(
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col(id_col)
     )
-    out = rer.withColumn("rank", F.row_number().over(w)).filter(
+    return rer.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
-    if mkey is not None:
-        from pyspark import StorageLevel
-
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        _memo_store(sess, mkey, out)
-    return out
 
 
 def kmeans_cluster(
@@ -1044,35 +819,6 @@ def kmeans_cluster(
     vecs = corpus.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
     )
-    # INPUT-keyed session memo (r13): the Lloyd loop runs collect()
-    # jobs at plan-BUILD time (seeds + one centroid pull per round),
-    # so the output-keyed memo() would still pay them on every call.
-    # Key on the input plan + params BEFORE iterating; the fixed run
-    # is shared by cluster_kmeans_fixed, embedding_cluster_purity and
-    # pipeline_semdedup. Hit-time guard: live owning session + the
-    # exact output column triple (a 32-bit collision must recompute).
-    sess = corpus.sparkSession
-    try:
-        mkey = (
-            id(sess),
-            f"kmeans:{k}:{n_iter}:{round_to}:{id_col}",
-            vecs.semanticHash(),
-            _files_tag(vecs),
-        )
-    except Exception:
-        mkey = None
-    if mkey is not None:
-        hit = _MEMO_CACHE.get(mkey)
-        if hit is not None:
-            owner, cached = hit
-            if (
-                owner is sess
-                and _session_live(sess)
-                and cached.columns == [id_col, "cluster", "cos_sim"]
-            ):
-                _MEMO_CACHE.move_to_end(mkey)
-                return cached
-            _memo_drop(mkey)
     seed_rows = (
         vecs.withColumn("__h", F.md5(F.col(id_col).cast("string")))
         .orderBy("__h")
@@ -1131,15 +877,9 @@ def kmeans_cluster(
                 new_cents[cid][pos] = m
         cents = new_cents
 
-    out = with_assignment(vecs, cents).select(
+    return with_assignment(vecs, cents).select(
         id_col, "cluster", F.round(F.col("cos_sim"), round_to).alias("cos_sim")
     )
-    if mkey is not None:
-        from pyspark import StorageLevel
-
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        _memo_store(sess, mkey, out)
-    return out
 
 
 def cluster_purity(
@@ -2025,12 +1765,11 @@ def truncation_recall(
 
     Pure composition: [[ann_bruteforce]]'s exact top-k at full width
     and per-d sliced variants, scored by [[ann_recall_eval]]'s exact
-    integer hit counting (truth served from the session [[topk_truth]]
-    catalog — one brute-force pass across the whole audit suite).
+    integer hit counting.
     Cosine needs no re-normalization after slicing — it normalizes
     inside. Returns (method='dim<d>', n_queries, n_true, n_hits,
     recall_at_k, min_query_recall)."""
-    truth = topk_truth(corpus, queries, k, id_col, vec_col, dim=full_dim)
+    truth = cosine_topk(corpus, queries, k, id_col, vec_col, dim=full_dim)
     cands = {}
     for d in dims:
         c = corpus.select(
@@ -2070,7 +1809,7 @@ def bq_recall(
     ranked = _bq_ranked(corpus, queries, dim, id_col, vec_col).filter(
         F.col("rank") <= k
     )
-    truth = topk_truth(corpus, queries, k, id_col, vec_col, dim=vec_dim)
+    truth = cosine_topk(corpus, queries, k, id_col, vec_col, dim=vec_dim)
     return recall_eval(truth, {f"bq{dim}": ranked}, k)
 
 
@@ -2080,26 +1819,17 @@ def _bq_ranked(
     dim: int,
     id_col: str,
     vec_col: str,
-    kmax: int = 64,
 ) -> DataFrame:
-    """Hamming-ranked BQ candidates memoized to the top `kmax` per
-    query: [[embedding_bq_recall]] (k=5) and [[ann_two_stage]]
-    (shortlist=20 + k=5) read the SAME persisted table instead of
-    re-running the bit-pack scan each. row_number over (__ham, id) is
-    deterministic, so any filter rank <= j (j <= kmax) is bitwise the
-    j-ranking."""
+    """Hamming-ranked BQ candidates per query. row_number over
+    (__ham, id) is deterministic, so any filter rank <= j is bitwise
+    the j-ranking."""
     cand = _bq_candidates(corpus, queries, dim, id_col, vec_col)
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy(
         F.col("__ham"), F.col(id_col)
     )
-    return memo(
-        cand.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= kmax
-        ),
-        tag="bq_ranked",
-    )
+    return cand.withColumn("rank", F.row_number().over(w))
 
 
 def _bq_candidates(
@@ -2203,10 +1933,7 @@ def two_stage_recall(
             f"shortlist ({shortlist}) must be >= k ({k}): the rerank"
             " can only return what the shortlist proposes"
         )
-    staged = _bq_ranked(
-        corpus, queries, dim, id_col, vec_col,
-        kmax=max(64, int(shortlist)),
-    )
+    staged = _bq_ranked(corpus, queries, dim, id_col, vec_col)
     from pyspark.sql import Window
 
     bq_k = staged.filter(F.col("rank") <= k)
@@ -2240,7 +1967,7 @@ def two_stage_recall(
     reranked = rescored.withColumn(
         "rank", F.row_number().over(w2)
     ).filter(F.col("rank") <= k)
-    truth = topk_truth(corpus, queries, k, id_col, vec_col, dim=vec_dim)
+    truth = cosine_topk(corpus, queries, k, id_col, vec_col, dim=vec_dim)
     return recall_eval(
         truth,
         {f"bq{dim}": bq_k, f"bq{dim}_rerank{shortlist}": reranked},
@@ -2398,37 +2125,8 @@ def kcenter_select(
     Returns k rows: (sel_order, id, sel_d2) — selection rank, the
     chosen id, and its distance-to-selected-set at selection time
     (NULL for the seed; the max sel_d2 is the coverage radius the
-    next center would have shaved).
-
-    The finished trace is session-memoized keyed on the INPUT plan
-    (+files tag, k, columns) — kcenter_assign re-derives exactly this
-    trace (r12 verdict #4: 9.5 s select + 6.2 s assign inline, the
-    assign half repeating the select's k greedy rounds), so the
-    second caller gets the k-row table back and pays only its own
-    broadcast-fold scan. The memoized frame is a LocalRelation (k
-    driver rows) — nothing to persist, the LRU entry just carries
-    it."""
+    next center would have shaved)."""
     spark = df.sparkSession
-    id_type_early = df.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("sel_order", T.LongType(), False),
-            T.StructField(id_col, id_type_early, True),
-            T.StructField("sel_d2", T.DoubleType(), True),
-        ]
-    )
-    memo_key = None
-    try:
-        memo_key = (
-            id(spark), f"kcenter:{k}:{id_col}:{vec_col}",
-            df.semanticHash(), _files_tag(df),
-        )
-    except Exception:
-        pass  # exotic plan that can't hash: compute uncached
-    if memo_key is not None:
-        cached = _memo_lookup(spark, memo_key, out_schema)
-        if cached is not None:
-            return cached
     v = df.select(
         F.col(id_col).alias("__id"),
         F.transform(vec_col, lambda x: x.cast("double")).alias("__vec"),
@@ -2468,16 +2166,16 @@ def kcenter_select(
     # out_schema derives the id field's type from the input (string /
     # int / long ids all round-trip; a hardcoded `long` broke
     # non-long id columns)
-    out = spark.createDataFrame(
-        [(o, i, d) for o, i, d in picked], out_schema
-    ).withColumn("sel_d2", F.round("sel_d2", 6))
-    if memo_key is not None:
-        # collapse to a LocalRelation NOW (k rows) so the memoized
-        # frame is detached from the greedy plan and its checkpoints,
-        # and so the schema matches out_schema exactly on lookup
-        out = spark.createDataFrame(out.collect(), out_schema)
-        _memo_store(spark, memo_key, out)
-    return out
+    out_schema = T.StructType(
+        [
+            T.StructField("sel_order", T.LongType(), False),
+            T.StructField(id_col, df.schema[id_col].dataType, True),
+            T.StructField("sel_d2", T.DoubleType(), True),
+        ]
+    )
+    return spark.createDataFrame(picked, out_schema).withColumn(
+        "sel_d2", F.round("sel_d2", 6)
+    )
 
 
 def kcenter_assign(

@@ -1923,13 +1923,6 @@ def theil_sen_trend(
             "percentile(__v - sen_slope_per_sec * CAST(__t AS DOUBLE), 0.5)"
         ).alias("intercept"),
     )
-    # Session memo of the fitted trend table (the ann.memo kcenter
-    # precedent): capacity_eta composes the EXACT trend ts_trend_robust
-    # just fitted — one O(buckets²) fit per session instead of one per
-    # consumer. Rows-per-key output, dies with the session.
-    from fossil_spark.operators.ann import memo
-
-    out = memo(out, tag="theil_sen")
     return out.select(
         *by,
         "n_buckets",
@@ -3580,11 +3573,13 @@ def _rolling_rank_arrow(
     rank selection on the same float64 values the JVM holds, no
     interpolation, no summation — so np.sort vs array_sort select
     the identical element (A/B: rows str-identical at sf0.01 AND
-    sf0.1 for both consumers). Requires DOUBLE values with no nulls
-    (collect_list skips nulls; a numpy window would carry NaN) —
-    callers guard before routing here. Emits the input columns plus
-    __med (+ __mad) for FULL frames only, exactly the hof path's
-    full-frame filter."""
+    sf0.1 for both consumers). Requires DOUBLE values. collect_list
+    skips nulls, so a hof frame that holds a null is short and never
+    emits; here the null flag rides along (pandas reads a null as
+    NaN, and real NaNs must stay) and every window holding a null is
+    dropped. Rows sort with nulls first, as Spark's ascending
+    orderBy does. Emits the input columns plus __med (+ __mad) for
+    FULL frames only, exactly the hof path's full-frame filter."""
     import numpy as np
     import pandas as pd
 
@@ -3603,8 +3598,9 @@ def _rolling_rank_arrow(
 
     def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(
-            [time_col] + order_tiebreak, kind="mergesort"
+            [time_col] + order_tiebreak, kind="mergesort", na_position="first"
         )
+        null = pdf.pop("__null").to_numpy(dtype=bool)
         v = pdf[value_col].to_numpy(dtype=np.float64)
         if len(v) < w:
             out = pdf.iloc[:0].copy()
@@ -3612,15 +3608,18 @@ def _rolling_rank_arrow(
             if want_mad:
                 out["__mad"] = np.array([], dtype=np.float64)
             return out
-        sw = np.lib.stride_tricks.sliding_window_view(v, w)
+        keep = ~np.lib.stride_tricks.sliding_window_view(null, w).any(axis=1)
+        sw = np.lib.stride_tricks.sliding_window_view(v, w)[keep]
         med = np.sort(sw, axis=1)[:, mid]
-        out = pdf.iloc[w - 1:].copy()
+        out = pdf.iloc[w - 1:][keep].copy()
         out["__med"] = med
         if want_mad:
             out["__mad"] = np.sort(np.abs(sw - med[:, None]), axis=1)[:, mid]
         return out
 
-    return base.groupBy(*by).applyInPandas(per_key, out_schema)
+    return base.withColumn("__null", F.col(value_col).isNull()).groupBy(
+        *by
+    ).applyInPandas(per_key, out_schema)
 
 
 def _rank_window_engine(

@@ -459,9 +459,8 @@ def dedup_aware_sample(
     re-inflates duplicates). Reports, per source, how the two stages
     compound: raw -> canonical -> sampled docs and token volume.
 
-    Shape: the session-shared component catalog
-    ([[dedup_rate_by_source]]'s table, computed once) broadcasts onto
-    one doc scan; one |sources|-row groupBy. The md5 rule is the
+    Shape: the near-dup component table
+    ([[dedup_rate_by_source]]'s table) broadcasts onto one doc scan; one |sources|-row groupBy. The md5 rule is the
     stratified_sample rule — identical selection across runs, engines
     and cluster sizes. Returns (source, n_docs, n_canonical,
     n_sampled, n_tokens, sampled_tokens, realized_rate)."""
@@ -534,7 +533,7 @@ def source_health(docs: DataFrame) -> DataFrame:
     struct fields (arithmetic-identical to lang_pred_expr /
     quality_score — same subexpressions, same fold order). Near-dup
     membership comes from [[dedup_minhash]]'s LSH buckets
-    (lsh_membership) instead of the component catalog: this rollup
+    (lsh_membership) instead of the component table: this rollup
     only tests `IS NOT NULL`, and the component labels cost O(graph
     diameter) join+count DRIVER actions at plan-build time (13.8 of
     the 15.3 cold seconds, r14 profile). One broadcast join, one
@@ -795,7 +794,7 @@ def soft_dedup_weights(
     the effective corpus size vs the raw count. The dedup literature's
     middle path between keep-all and [[sample_dedup_aware]]'s hard
     drop. Weights are exact 1/n rationals accumulated in decimal.
-    Composes the session component catalog + a |components| count
+    Composes the near-dup component table + a |components| count
     broadcast. Returns (source, n_docs, effective_docs,
     effective_frac)."""
     comp = dedup.neardup_components(docs)

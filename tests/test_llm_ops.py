@@ -123,10 +123,7 @@ def test_minhash_hot_bucket_streams(spark):
     assert pairs.count() == n * (n - 1) // 2
     # single-branch guard on the ANALYZED logical plan: the source
     # relation must appear exactly once (the earlier two-branch shape
-    # carried the whole signature pipeline per branch). The executed
-    # plan is no longer a valid probe — the r13 matrix/pair session
-    # memos nest cached-plan dumps, so textual scan counts over it
-    # double-count without any re-execution.
+    # carried the whole signature pipeline per branch).
     logical = pairs._jdf.queryExecution().analyzed().toString()
     n_src = logical.count("LogicalRDD") + logical.count("LocalRelation")
     assert n_src == 1
@@ -2355,25 +2352,6 @@ def test_bq_recall_rejects_dim_past_one_word(spark):
         ann.bq_recall(df, df, k=1, dim=80)
     with pytest.raises(ValueError, match=r"\[1, 64\]"):
         ann.bq_recall(df, df, k=1, dim=0)
-
-
-def test_neardup_component_cache_lru_and_invalidate(spark):
-    docs = read_table(spark, "/root/testdata/sf0.001", "documents")
-    dedup.neardup_components_invalidate()
-    c1 = dedup.neardup_components(docs)
-    assert len(dedup._COMPONENT_CACHE) == 1
-    # same plan -> same cached DataFrame object, no duplicate entry
-    assert dedup.neardup_components(docs) is c1
-    assert len(dedup._COMPONENT_CACHE) == 1
-    # distinct plans evict LRU-first at the cap
-    for i in range(dedup._COMPONENT_CACHE_MAX):
-        dedup.neardup_components(docs.filter(F.col("doc_id") > i))
-    assert len(dedup._COMPONENT_CACHE) == dedup._COMPONENT_CACHE_MAX
-    assert all(
-        owner is spark for owner, _ in dedup._COMPONENT_CACHE.values()
-    )
-    dedup.neardup_components_invalidate()
-    assert len(dedup._COMPONENT_CACHE) == 0
 
 
 def test_source_health_planted(spark):

@@ -468,7 +468,7 @@ _SCAN_BUDGET = {
     "ts_peak_hour": 1,            # two tiny groupBys + one argmax
     "ts_cusum": 1,                # bucket agg + key windows + Arrow fold
     "text_pii": 1,                # regexp counts fold into the scan
-    "sample_dedup_aware": 3,      # component pipeline (2, or cached) + doc side
+    "sample_dedup_aware": 3,      # component pipeline (2) + doc side
     "ts_gapfill_eval": 1,         # one bucket agg + two key windows
     "sample_class_balanced": 3,   # counts + 1-row min + rule-fold scan
     "ann_filtered": 2,            # corpus scan + broadcast query side
@@ -477,7 +477,7 @@ _SCAN_BUDGET = {
     "ts_histogram_quantile": 1,   # histogram windows + per-(key,q) argmin
     "embedding_trunc_recall": 6,  # truth checkpointed once; 3 sliced variants x (corpus + query) scans
     "embedding_bq_recall": 5,     # means + bits (corpus/query) + truth pair
-    "pipeline_source_health": 4,  # fused flags scan + quality side + catalog (2, or cached)
+    "pipeline_source_health": 4,  # fused flags scan + quality side + LSH membership (2)
     "dedup_lsh_diagnosis": 3,     # estimate pipeline (sigs + pairs) + tiny groupBy
     "agg_rolling_active": 1,      # distinct (user,day) + contribute explode
     "ts_quantile_sketch_audit": 2,  # windows+sketch scan + rank-of-approx pass
@@ -493,7 +493,7 @@ _SCAN_BUDGET = {
     "ts_ewma_control": 1,         # bucket agg + Arrow fold + key windows
     "dedup_winnowing": 1,         # fingerprints fold into the scan; bucket pairs
     "ts_availability": 1,         # bucket agg checkpointed; grid/totals/runs reuse it
-    "sample_soft_dedup": 3,       # component pipeline (2, or cached) + doc side
+    "sample_soft_dedup": 3,       # component pipeline (2) + doc side
     "text_common_word_ratio": 2,  # token explode feeds top-n + membership branches
     "agg_lorenz": 1,              # |users| agg + rank + 10-row windows
     "agg_chi2": 1,                # 35-row contingency table + windows
@@ -516,8 +516,8 @@ _SCAN_BUDGET = {
 def _live_scans(phys: str) -> list[str]:
     """FileScan signatures that would EXECUTE as file scans: the raw
     occurrences minus any subtree printed under an InMemoryRelation
-    (extended explain DOES print the cached tree — observed on the
-    ann session-memo keys, where an EXECUTED cache entry even prints
+    (extended explain DOES print the cached tree — observed on
+    persisted tables, where an EXECUTED cache entry even prints
     its AQE Final AND Initial plans — two echoes of every scan — but
     at runtime that subtree is served by InMemoryTableScan, not
     re-scanned). Subtree membership tracked by the tree-printer's

@@ -1,133 +1,10 @@
-"""Round-13 regression tests: memo staleness (files-tag keys), the
-stopped-session sweep, and the new operators of this round."""
+"""Round-13 regression tests: the bucketed-events snapshot tag and
+the new operators of this round."""
 
 from datetime import datetime, timedelta
 
 import pytest
 from pyspark.sql import functions as F
-
-
-# --------------------------------------------------------------------------
-# memo staleness: rewriting parquet behind a previously-seen plan must
-# MISS the cache and rebuild fresh results (r12 verdict #3)
-# --------------------------------------------------------------------------
-
-def _write_emb(spark, path: str, scale: int) -> None:
-    spark.createDataFrame(
-        [(i, [float((i * 7 + j * 3) % 11) * scale for j in range(4)])
-         for i in range(30)],
-        "vec_id long, embedding array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def test_ann_memo_files_tag_staleness(spark, tmp_path):
-    """topk_truth called on the same plan before and after the parquet
-    behind it is rewritten: the files-tag component of the memo key
-    must force a rebuild — the old plan-only key served stale truth
-    until ann_memo_invalidate() was called by hand."""
-    from fossil_spark.operators import ann
-
-    path = str(tmp_path / "emb.parquet")
-    _write_emb(spark, path, scale=1)
-    ann.ann_memo_invalidate()
-
-    def truth_ids():
-        emb = spark.read.parquet(path)
-        q = emb.filter("vec_id = 7")
-        return sorted(
-            r["vec_id"]
-            for r in ann.topk_truth(emb, q, k=5).collect()
-        )
-
-    first = truth_ids()
-    # same files, same plan: the second call must HIT (one entry)
-    assert truth_ids() == first
-    n_before = len(ann._MEMO_CACHE)
-
-    # rewrite the corpus: vec 7's neighborhood flips because every
-    # vector is scaled but vec-id identity stays; cosine is scale
-    # invariant so scale alone wouldn't change ranks — change content
-    spark.createDataFrame(
-        [(i, [float((i * 13 + j * 5) % 17) for j in range(4)])
-         for i in range(30)],
-        "vec_id long, embedding array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-    fresh = truth_ids()
-    # a fresh entry was created (no stale serve), and the result is
-    # the true brute-force answer on the NEW files
-    assert len(ann._MEMO_CACHE) > n_before
-    emb2 = spark.read.parquet(path)
-    direct = sorted(
-        r["vec_id"]
-        for r in ann.cosine_topk(emb2, emb2.filter("vec_id = 7"), k=5).collect()
-    )
-    assert fresh == direct
-    ann.ann_memo_invalidate()
-
-
-def test_dedup_component_cache_files_tag_staleness(spark, tmp_path):
-    """Same invariant for the dedup component catalog: a rewritten
-    docs parquet must not serve the previous component table."""
-    from fossil_spark.operators import dedup
-
-    path = str(tmp_path / "docs.parquet")
-    spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta"),
-         (2, "alpha beta gamma delta epsilon zeta eta theta"),
-         (3, "totally different words here nothing shared at all")],
-        "doc_id long, text string",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-    dedup.neardup_components_invalidate()
-
-    comp1 = dedup.neardup_components(spark.read.parquet(path))
-    assert {r["doc_id"] for r in comp1.collect()} == {1, 2}
-    n_before = len(dedup._COMPONENT_CACHE)
-
-    # rewrite: now 2 and 3 are the near-dup pair
-    spark.createDataFrame(
-        [(1, "totally different words here nothing shared at all"),
-         (2, "alpha beta gamma delta epsilon zeta eta theta"),
-         (3, "alpha beta gamma delta epsilon zeta eta theta")],
-        "doc_id long, text string",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-    comp2 = dedup.neardup_components(spark.read.parquet(path))
-    assert {r["doc_id"] for r in comp2.collect()} == {2, 3}
-    assert len(dedup._COMPONENT_CACHE) > n_before
-    dedup.neardup_components_invalidate()
-
-
-def test_memo_sweeps_stopped_session_entries(spark):
-    """Entries whose owning session has been stopped can never hit
-    again; the next insert must sweep them out of the LRU instead of
-    letting them crowd out live entries (r12 ADVICE)."""
-    from fossil_spark.operators import ann
-
-    class _DeadContext:
-        _jsc = None
-
-    class _DeadSession:
-        sparkContext = _DeadContext()
-
-    class _Unpersistable:
-        unpersisted = False
-
-        def unpersist(self):
-            self.unpersisted = True
-
-    ann.ann_memo_invalidate()
-    dead_df = _Unpersistable()
-    ann._MEMO_CACHE[("dead", "t", 0, "tag")] = (_DeadSession(), dead_df)
-
-    emb = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(5)],
-        "vec_id long, embedding array<double>",
-    )
-    ann.topk_truth(emb, emb.filter("vec_id = 0"), k=3).collect()
-    assert ("dead", "t", 0, "tag") not in ann._MEMO_CACHE
-    assert dead_df.unpersisted
-    ann.ann_memo_invalidate()
 
 
 def test_bucketed_events_content_tag_and_supersede_sweep(spark, tmp_path):
@@ -174,27 +51,6 @@ def test_bucketed_events_content_tag_and_supersede_sweep(spark, tmp_path):
     import shutil
 
     shutil.rmtree(dirs2[0], ignore_errors=True)
-
-
-def test_memo_schema_mismatch_falls_through(spark):
-    """A (hash-collision) hit whose cached schema differs from the
-    requested plan's schema must recompute, not serve the wrong
-    table: forced by planting a wrong-schema entry under the exact
-    key memo() would compute."""
-    from fossil_spark.operators import ann
-
-    ann.ann_memo_invalidate()
-    emb = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(5)],
-        "vec_id long, embedding array<double>",
-    )
-    plan = ann.cosine_topk(emb, emb.filter("vec_id = 0"), k=3)
-    key = (id(spark), "", plan.semanticHash(), ann._files_tag(plan))
-    wrong = spark.createDataFrame([(1,)], "other_col long")
-    ann._MEMO_CACHE[key] = (spark, wrong)
-    served = ann.memo(plan)
-    assert served.schema == plan.schema  # not the planted frame
-    ann.ann_memo_invalidate()
 
 
 def test_jaccard_truncation_self_describing(spark):
@@ -458,61 +314,6 @@ def test_lomb_scargle_finds_planted_period(spark):
         assert abs(out[p]["power_norm"] - replay(p)) < 1e-4, p
 
 
-# --------------------------------------------------------------------------
-# r13 optimization: the near-dup pair graph is session-memoized (the
-# ANN truth-catalog pattern) — same session + same files HIT, a
-# rewritten parquet behind the same plan MISSES and rebuilds
-# --------------------------------------------------------------------------
-
-def _write_docs(spark, path: str, texts: list[str]) -> None:
-    spark.createDataFrame(
-        [(i, t, "web") for i, t in enumerate(texts)],
-        "doc_id long, text string, source string",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def test_minhash_pairs_session_memo(spark, tmp_path):
-    """minhash_lsh_pairs memoizes its pair table per (session, input
-    plan, files): the second call returns identical rows without
-    rebuilding, and rewriting the parquet behind the same plan misses
-    the memo and reflects the new corpus."""
-    from fossil_spark.operators import ann, dedup
-
-    path = str(tmp_path / "docs.parquet")
-    base = "the quick brown fox jumps over the lazy dog again and again "
-    _write_docs(
-        spark, path,
-        [base + "alpha", base + "alpha", base + "beta beta beta beta",
-         "completely different text with nothing shared at all here"],
-    )
-    ann.ann_memo_invalidate()
-
-    def pairs_rows():
-        docs = spark.read.parquet(path)
-        return sorted(
-            (r["doc_a"], r["doc_b"])
-            for r in dedup.minhash_lsh_pairs(docs).collect()
-        )
-
-    first = pairs_rows()
-    assert (0, 1) in first  # the near-identical pair is found
-    n_entries = len(ann._MEMO_CACHE)
-    assert any(k[1].startswith("mh_pairs:") for k in ann._MEMO_CACHE)
-    # same session, same files: HIT — no new entry
-    assert pairs_rows() == first
-    assert len(ann._MEMO_CACHE) == n_entries
-
-    # rewrite the corpus behind the same plan: MISS + fresh pairs
-    _write_docs(
-        spark, path,
-        [base + "gamma", base + "delta delta",
-         base + "gamma", "unrelated text entirely on its own here"],
-    )
-    fresh = pairs_rows()
-    assert (0, 2) in fresh  # the NEW near-identical pair
-    ann.ann_memo_invalidate()
-
-
 def test_theil_sen_sort_median_matches_percentile(spark):
     """r13 optimization regression: the sen-slope median is computed
     by radix-sort + middle-row pick instead of the percentile()
@@ -524,7 +325,7 @@ def test_theil_sen_sort_median_matches_percentile(spark):
 
     import pyspark.sql.functions as F
 
-    from fossil_spark.operators import ann, timeseries as ts
+    from fossil_spark.operators import timeseries as ts
 
     base = datetime(2024, 3, 1)
     rows = []
@@ -541,7 +342,6 @@ def test_theil_sen_sort_median_matches_percentile(spark):
     df = spark.createDataFrame(
         rows, "event_id long, event_type string, ts timestamp, value double"
     )
-    ann.ann_memo_invalidate()
     got = {
         r["event_type"]: r
         for r in ts.theil_sen_trend(
@@ -598,201 +398,6 @@ def test_theil_sen_sort_median_matches_percentile(spark):
             "d", round(ref[k]["slope"], 15)
         ), (k, have, want)
         assert got[k]["mk_s"] == ref[k]["mk_s"]
-    ann.ann_memo_invalidate()
-
-
-def test_kmeans_input_keyed_session_memo(spark, tmp_path):
-    """r13: kmeans_cluster memoizes on the INPUT plan + params before
-    the Lloyd loop (the loop runs collect() jobs at build time, so an
-    output-keyed memo would still pay them). Second call returns the
-    identical assignment without re-iterating; rewriting the parquet
-    behind the same plan misses and re-fits."""
-    import pyspark.sql.functions as F
-
-    from fossil_spark.operators import ann
-
-    path = str(tmp_path / "emb.parquet")
-
-    def write(vecs):
-        spark.createDataFrame(
-            [(i, v, i % 2) for i, v in enumerate(vecs)],
-            "vec_id long, embedding array<double>, label int",
-        ).write.mode("overwrite").parquet(path)
-
-    write([[1.0, 0.0], [0.9, 0.1], [0.0, 1.0], [0.1, 0.9]])
-    ann.ann_memo_invalidate()
-
-    def assign():
-        emb = spark.read.parquet(path)
-        return sorted(
-            (r["vec_id"], r["cluster"])
-            for r in ann.kmeans_cluster(emb, k=2, n_iter=1).collect()
-        )
-
-    first = assign()
-    n = len(ann._MEMO_CACHE)
-    assert any(k[1].startswith("kmeans:") for k in ann._MEMO_CACHE)
-    assert assign() == first          # same session, same files: HIT
-    assert len(ann._MEMO_CACHE) == n  # no new entry
-
-    # different params -> different key, coexisting entry
-    emb = spark.read.parquet(path)
-    ann.kmeans_cluster(emb, k=2, n_iter=2).collect()
-    assert len(ann._MEMO_CACHE) == n + 1
-
-    # rewrite behind the same plan: MISS + fresh fit on the new data
-    write([[0.0, 1.0], [1.0, 0.0], [0.05, 0.95], [0.95, 0.05]])
-    fresh = assign()
-    assert {v for _, v in fresh} == {0, 1}
-    # vec 0 and 2 now point the same way and must co-cluster
-    d = dict(fresh)
-    assert d[0] == d[2] and d[1] == d[3] and d[0] != d[1]
-    ann.ann_memo_invalidate()
-
-
-def test_bpe_chain_input_keyed_session_memo(spark, tmp_path):
-    """r13: _bpe_chain memoizes (bests, syms) on the input plan +
-    params so bpe_encode/vocab_coverage/tokenizer_fertility reuse the
-    merge table bpe_train already learned. Hit returns identical
-    merges; rewriting the parquet behind the same plan misses and
-    relearns on the new corpus."""
-    from fossil_spark.operators import text
-
-    path = str(tmp_path / "docs.parquet")
-
-    def write(rows):
-        spark.createDataFrame(
-            [(i, t) for i, t in enumerate(rows)], "doc_id long, text string"
-        ).write.mode("overwrite").parquet(path)
-
-    write(["low lower lowest", "low low newer", "wider new newer"])
-    text._BPE_CHAIN_MEMO.clear()
-
-    def merges():
-        docs = spark.read.parquet(path)
-        return [
-            (r["merge_round"], r["lhs"], r["rhs"])
-            for r in text.bpe_train(docs, n_merges=3).collect()
-        ]
-
-    first = merges()
-    n = len(text._BPE_CHAIN_MEMO)
-    assert n == 1 and any(
-        k[1].startswith("bpe:") for k in text._BPE_CHAIN_MEMO
-    )
-    assert merges() == first              # same session, same files: HIT
-    assert len(text._BPE_CHAIN_MEMO) == n
-
-    # different n_merges -> different key, coexisting entry
-    docs = spark.read.parquet(path)
-    text.bpe_train(docs, n_merges=2).collect()
-    assert len(text._BPE_CHAIN_MEMO) == n + 1
-
-    # rewrite behind the same plan: MISS + relearn on the new corpus
-    write(["zz zz zzz", "zz zzz zzzz", "zzzz zz"])
-    fresh = merges()
-    assert fresh != first
-    assert fresh[0][1:] == ("z", "z")  # 'zz' is the new top pair
-    text._BPE_CHAIN_MEMO.clear()
-
-
-def test_label_propagation_input_keyed_session_memo(spark, tmp_path):
-    """r13: label_propagation memoizes its propagated labels on the
-    (pairs, seeds, params) input plans — graph_modularity reuses the
-    table graph_label_prop just built instead of re-running the
-    3-round propagation at plan-build time."""
-    from fossil_spark.operators import ann, graph
-
-    pairs_path = str(tmp_path / "pairs.parquet")
-    spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
-    ).write.mode("overwrite").parquet(pairs_path)
-    seeds = spark.createDataFrame(
-        [(1, "a"), (10, "b")], "doc_id long, label string"
-    )
-    ann.ann_memo_invalidate()
-
-    def labels():
-        pairs = spark.read.parquet(pairs_path)
-        return sorted(
-            (r["doc_id"], r["label"], r["is_seed"])
-            for r in graph.label_propagation(
-                pairs, seeds, n_rounds=2
-            ).collect()
-        )
-
-    first = labels()
-    assert dict((d, l) for d, l, _ in first) == {
-        1: "a", 2: "a", 3: "a", 10: "b", 11: "b"
-    }
-    n = len(ann._MEMO_CACHE)
-    assert any(k[1].startswith("labelprop:") for k in ann._MEMO_CACHE)
-    assert labels() == first          # same session, same inputs: HIT
-    assert len(ann._MEMO_CACHE) == n  # no new entry
-
-    # different n_rounds -> different key
-    pairs = spark.read.parquet(pairs_path)
-    graph.label_propagation(pairs, seeds, n_rounds=1).collect()
-    assert len(ann._MEMO_CACHE) == n + 1
-    ann.ann_memo_invalidate()
-
-
-def test_pq_ann_input_keyed_session_memo(spark, tmp_path):
-    """r13: pq_ann memoizes on the input plans + params before the
-    codebook training (the sample collect, numpy Lloyd and per-chunk
-    toLocalIterator all run at plan-BUILD time, so an output-keyed
-    memo would still pay them). Second call returns the identical
-    top-k; rewriting the parquet behind the same plan misses and
-    retrains on the new corpus."""
-    from fossil_spark.operators import ann
-
-    path = str(tmp_path / "emb.parquet")
-
-    def write(vecs):
-        spark.createDataFrame(
-            [(i, v) for i, v in enumerate(vecs)],
-            "vec_id long, embedding array<double>",
-        ).write.mode("overwrite").parquet(path)
-
-    write([
-        [1.0, 0.0, 0.0, 0.0], [0.9, 0.1, 0.0, 0.0],
-        [0.0, 1.0, 0.0, 0.0], [0.0, 0.9, 0.1, 0.0],
-        [0.0, 0.0, 1.0, 0.0], [0.0, 0.0, 0.0, 1.0],
-    ])
-    ann.ann_memo_invalidate()
-
-    def topk(n_iter=1):
-        emb = spark.read.parquet(path)
-        q = emb.filter("vec_id < 2")
-        return sorted(
-            (r["query_id"], r["vec_id"], r["rank"])
-            for r in ann.pq_ann(
-                emb, q, k=1, m=2, n_cents=2, n_iter=n_iter,
-                rerank_factor=2,
-            ).collect()
-        )
-
-    first = topk()
-    # exact rerank: each query's nearest is its co-directional partner
-    assert (0, 1, 1) in first and (1, 0, 1) in first
-    n = len(ann._MEMO_CACHE)
-    assert any(k[1].startswith("pq:") for k in ann._MEMO_CACHE)
-    assert topk() == first            # same session, same files: HIT
-    assert len(ann._MEMO_CACHE) == n  # no new entry
-
-    # different params -> different key, coexisting entry
-    topk(n_iter=2)
-    assert len(ann._MEMO_CACHE) == n + 1
-
-    # rewrite behind the same plan: MISS + fresh train on the new data
-    write([
-        [0.0, 0.0, 1.0, 0.0], [0.0, 0.0, 0.9, 0.1],
-        [1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0],
-        [0.9, 0.1, 0.0, 0.0], [0.1, 0.9, 0.0, 0.0],
-    ])
-    fresh = topk()
-    assert (0, 1, 1) in fresh and (1, 0, 1) in fresh
-    ann.ann_memo_invalidate()
 
 
 def test_cosine_topk_engines_bit_identical(spark):

@@ -1,61 +1,9 @@
-"""Round-14 regression tests: memo size-cap admission, the chunked /
-vector-hygiene Arrow cosine grid, LSH membership equivalence, and the
-join-free jaccard-estimate restructure."""
-
-import os
+"""Round-14 regression tests: the chunked / vector-hygiene Arrow
+cosine grid, LSH membership equivalence, the join-free
+jaccard-estimate restructure and the rolling rank-median engines."""
 
 import pytest
 from pyspark.sql import functions as F
-
-
-# --------------------------------------------------------------------------
-# memo size-aware admission (r13 verdict #3): entries whose plan reads
-# more than SPARK_GRAFT_MEMO_MAX_BYTES of leaf input are not pinned
-# --------------------------------------------------------------------------
-
-def _write_docs(spark, path: str, n: int = 40) -> None:
-    rows = [
-        (i, f"alpha beta gamma delta {i % 7} common tail words here")
-        for i in range(n)
-    ]
-    spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(path)
-
-
-def test_memo_size_cap_rejects_large_inputs(spark, tmp_path, monkeypatch):
-    from fossil_spark.operators import ann
-
-    path = str(tmp_path / "docs.parquet")
-    _write_docs(spark, path)
-    df = spark.read.parquet(path).select("doc_id", F.length("text").alias("n"))
-
-    ann.ann_memo_invalidate()
-    monkeypatch.setenv("SPARK_GRAFT_MEMO_MAX_BYTES", "1")
-    out = ann.memo(df, tag="cap-test")
-    # rejected: no cache entry, result not persisted, rows still right
-    assert len(ann._MEMO_CACHE) == 0
-    assert out.storageLevel.useMemory is False
-    assert out.count() == 40
-
-    monkeypatch.setenv("SPARK_GRAFT_MEMO_MAX_BYTES", str(8 * 1024**3))
-    out2 = ann.memo(df, tag="cap-test")
-    assert len(ann._MEMO_CACHE) == 1
-    assert out2.count() == 40
-    ann.ann_memo_invalidate()
-
-
-def test_memo_cap_unknown_size_admits(spark):
-    """In-memory plans (no file leaves) have unknown size and must
-    keep memoizing — the cap stops KNOWN-huge tables only."""
-    from fossil_spark.operators import ann, plan_input_bytes
-
-    df = spark.createDataFrame([(1, 2.0)], "id long, v double")
-    assert plan_input_bytes(df) is None
-    ann.ann_memo_invalidate()
-    ann.memo(df, tag="mem-test")
-    assert len(ann._MEMO_CACHE) == 1
-    ann.ann_memo_invalidate()
 
 
 # --------------------------------------------------------------------------
@@ -129,7 +77,7 @@ def test_cosine_topk_arrow_drops_null_and_ragged(spark):
 # --------------------------------------------------------------------------
 
 def test_lsh_membership_matches_pair_ids(spark, tmp_path):
-    from fossil_spark.operators import ann, dedup
+    from fossil_spark.operators import dedup
 
     path = str(tmp_path / "docs.parquet")
     rows = [(i, "the quick brown fox jumps over the lazy dog") for i in range(6)]
@@ -141,7 +89,6 @@ def test_lsh_membership_matches_pair_ids(spark, tmp_path):
     ).write.mode("overwrite").parquet(path)
     docs = spark.read.parquet(path)
 
-    ann.ann_memo_invalidate()
     pairs = dedup.minhash_lsh_pairs(docs)
     want = sorted(
         set(r["doc_a"] for r in pairs.collect())
@@ -150,7 +97,6 @@ def test_lsh_membership_matches_pair_ids(spark, tmp_path):
     got = sorted(r["doc_id"] for r in dedup.lsh_membership(docs).collect())
     assert got == want
     assert len(got) >= 10  # the two planted dup families are members
-    ann.ann_memo_invalidate()
 
 
 # --------------------------------------------------------------------------
@@ -159,7 +105,7 @@ def test_lsh_membership_matches_pair_ids(spark, tmp_path):
 # --------------------------------------------------------------------------
 
 def test_jaccard_estimate_matches_joined_reference(spark, tmp_path):
-    from fossil_spark.operators import ann, dedup
+    from fossil_spark.operators import dedup
 
     path = str(tmp_path / "docs.parquet")
     rows = [(i, "shared boilerplate text block repeated verbatim") for i in range(5)]
@@ -169,7 +115,6 @@ def test_jaccard_estimate_matches_joined_reference(spark, tmp_path):
     ).write.mode("overwrite").parquet(path)
     docs = spark.read.parquet(path)
 
-    ann.ann_memo_invalidate()
     est = dedup.minhash_jaccard_estimate(docs).collect()
     got = sorted((r["doc_a"], r["doc_b"], r["n_match"], r["jaccard_est"]) for r in est)
 
@@ -198,15 +143,15 @@ def test_jaccard_estimate_matches_joined_reference(spark, tmp_path):
     want = sorted((r["doc_a"], r["doc_b"], r["n_match"], r["jaccard_est"]) for r in ref)
     assert got == want
     assert len(got) > 0
-    ann.ann_memo_invalidate()
 
 
 # --------------------------------------------------------------------------
 # rolling rank-median Arrow engine (hampel / rolling_median): the numpy
-# path must be bit-identical to the JVM window shape, full frames only
+# path must be bit-identical to the JVM window shape, full frames only,
+# also when a value or a timestamp is null
 # --------------------------------------------------------------------------
 
-def _spiky_events(spark):
+def _spiky_events(spark, nulls: bool = False):
     from datetime import datetime, timedelta
 
     rows = []
@@ -216,7 +161,12 @@ def _spiky_events(spark):
             # deterministic wiggle + planted spikes; exact float ties
             # included (i%5 repeats values) to bait ordering bugs
             v = float((i * 7) % 5) + (50.0 if i in (20, 41) else 0.0)
-            rows.append((key, base + timedelta(minutes=i), v, i))
+            t = base + timedelta(minutes=i)
+            if nulls and (key, i) == ("a", 36):
+                v = None  # drops the 11 windows holding it, spike 41 too
+            if nulls and (key, i) == ("b", 10):
+                t = None  # Spark's ascending order puts it first
+            rows.append((key, t, v, i))
     return spark.createDataFrame(
         rows, "event_type string, ts timestamp, value double, event_id long"
     )
@@ -224,8 +174,6 @@ def _spiky_events(spark):
 
 def test_hampel_engines_bit_identical(spark):
     from fossil_spark.operators import timeseries as ts
-
-    ev = _spiky_events(spark)
 
     def rows(df):
         return sorted(
@@ -238,18 +186,18 @@ def test_hampel_engines_bit_identical(spark):
 
     kw = dict(window_rows=11, k=2.0, time_col="ts", by=["event_type"],
               value_col="value", order_tiebreak=["event_id"])
-    hof = rows(ts.hampel(ev, engine="hof", **kw))
-    arr = rows(ts.hampel(ev, engine="arrow", **kw))
-    auto = rows(ts.hampel(ev, **kw))
-    assert arr == hof
-    assert auto == hof
-    assert len(hof) >= 2  # the planted spikes flag
+    for nulls in (False, True):
+        ev = _spiky_events(spark, nulls)
+        hof = rows(ts.hampel(ev, engine="hof", **kw))
+        arr = rows(ts.hampel(ev, engine="arrow", **kw))
+        auto = rows(ts.hampel(ev, **kw))
+        assert arr == hof, nulls
+        assert auto == hof, nulls
+        assert len(hof) >= 2  # the planted spikes flag
 
 
 def test_rolling_median_engines_bit_identical(spark):
     from fossil_spark.operators import timeseries as ts
-
-    ev = _spiky_events(spark)
 
     def rows(df):
         return sorted(
@@ -261,11 +209,14 @@ def test_rolling_median_engines_bit_identical(spark):
 
     kw = dict(window_rows=11, time_col="ts", by=["event_type"],
               value_col="value", order_tiebreak=["event_id"])
-    hof = rows(ts.rolling_median(ev, engine="hof", **kw))
-    arr = rows(ts.rolling_median(ev, engine="arrow", **kw))
-    assert arr == hof
-    # 60 rows per key, full frames only: 50 rows per key
-    assert len(hof) == 100
+    # 60 rows per key, full frames only: 50 rows per key; the null
+    # value drops the 11 windows that hold it
+    for nulls, n_rows in ((False, 100), (True, 89)):
+        ev = _spiky_events(spark, nulls)
+        hof = rows(ts.rolling_median(ev, engine="hof", **kw))
+        arr = rows(ts.rolling_median(ev, engine="arrow", **kw))
+        assert arr == hof, nulls
+        assert len(hof) == n_rows
 
 
 def test_rank_window_auto_falls_back_without_keys_or_doubles(spark):

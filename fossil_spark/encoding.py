@@ -228,8 +228,6 @@ def encode_python(value, schema: FossilSchema | str) -> bytes:
     if isinstance(value, str):  # stored text: read it as Spark does
         value = datum_value(value, schema)
     if schema.entries:
-        if hasattr(value, "asDict"):  # pyspark Row
-            value = value.asDict()
         out = []
         for key, sub in schema.entries.items():
             member = _py_scalar_bytes_seq(value[key], sub)

@@ -39,7 +39,7 @@ import json
 import os
 import struct
 import zlib
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
 from fossil_spark.gob import Decoder, go_time
 
@@ -221,8 +221,10 @@ def import_reference_db(
             if schema_text and schema_text != "string" and topic:
                 store.set_schema(topic, schema_text)
                 reg.set(topic, schema_text)
+        # entries carry naive UTC times; createDataFrame would read a
+        # naive datetime as host-local time
         rows = [
-            (t, topic, _storage_text(data, reg.get(topic)))
+            (t.replace(tzinfo=timezone.utc), topic, _storage_text(data, reg.get(topic)))
             for t, topic, data in db["entries"]
         ]
         if not rows:
@@ -326,7 +328,8 @@ def import_reference_db(
             tid = d.get("TopicID", 0)
             topic = topics[tid] if 0 <= tid < len(topics) else "/"
             wal_rows.append((
-                head + timedelta(microseconds=d.get("Delta", 0) // 1000),
+                (head + timedelta(microseconds=d.get("Delta", 0) // 1000))
+                .replace(tzinfo=timezone.utc),
                 topic,
                 _storage_text(d.get("Data", b""), reg.get(topic)),
             ))

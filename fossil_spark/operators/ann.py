@@ -140,13 +140,14 @@ def _cosine_pairs_arrow(
     both engines (and the DuckDB oracle) share one rounding
     semantic.
 
-    Vector hygiene: this engine requires clean fixed-width vectors.
-    Null vectors are filtered in the Spark plan; when `dim` is given,
-    wrong-width vectors are too; without `dim`, rows whose width
-    differs from the group's first corpus row are dropped in the
-    worker. (The HOF path instead yields a null score that the rank
-    filter discards — same surviving rows on clean data, and a
-    deterministic drop instead of a worker crash on malformed rows.)
+    Vector hygiene: null vectors are filtered in the Spark plan; when
+    `dim` is given, wrong-width vectors are too. Without `dim`, the
+    worker splits corpus and queries by width and scores each width
+    against queries of the same width: the HOF path scores exactly
+    those pairs (zip_with pads a shorter vector with null, so any
+    other pair's score is null), and the kept pairs do not depend on
+    partition order. The HOF path keeps a null-scored pair only when
+    a query has fewer than k scored neighbours.
 
     Memory bound (r13 verdict #6): the per-group score grid is
     chunked along the corpus axis so no intermediate exceeds
@@ -192,13 +193,20 @@ def _cosine_pairs_arrow(
                 }
             )
 
-        if not len(cpdf) or not len(qpdf):
+        # the HOF score is null unless both widths are equal, so each
+        # width group scores only against queries of its width
+        cw = cpdf["__cv"].str.len()
+        qw = qpdf["__qv"].str.len()
+        frames = []
+        for width in sorted(set(cw) & set(qw)):
+            frames += score_width(cpdf[cw == width], qpdf[qw == width], width)
+        if not frames:
             return empty()
-        width = len(cpdf["__cv"].iloc[0])
-        cpdf = cpdf[cpdf["__cv"].str.len() == width]
-        qpdf = qpdf[qpdf["__qv"].str.len() == width]
-        if not len(cpdf) or not len(qpdf):
-            return empty()
+        return frames[0] if len(frames) == 1 else pd.concat(
+            frames, ignore_index=True
+        )
+
+    def score_width(cpdf: pd.DataFrame, qpdf: pd.DataFrame, width: int) -> list:
         Q = np.array(qpdf["__qv"].tolist(), dtype=np.float64)
         qn = np.zeros(len(Q))
         for t in range(width):
@@ -227,9 +235,7 @@ def _cosine_pairs_arrow(
                     }
                 )
             )
-        return frames[0] if len(frames) == 1 else pd.concat(
-            frames, ignore_index=True
-        )
+        return frames
 
     return (
         c.groupBy("__b")

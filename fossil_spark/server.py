@@ -35,6 +35,7 @@ import threading
 import time as _time
 from datetime import datetime, timezone
 
+import numpy as np
 from pyspark.sql import SparkSession
 
 LEN_WIDTH = 4
@@ -100,12 +101,89 @@ def unmarshal_strings(data: bytes) -> list[str]:
     return items
 
 
-def _rfc3339(dt: datetime) -> str:
-    """Go time.RFC3339Nano: fractional seconds without trailing zeros."""
-    s = dt.strftime("%Y-%m-%dT%H:%M:%S")
-    if dt.microsecond:
-        s += "." + f"{dt.microsecond:06d}".rstrip("0")
-    return s + "Z"
+def _rfc3339(times) -> list[str]:
+    """Go time.RFC3339Nano of an Arrow timestamp column, in UTC with
+    fractional seconds without trailing zeros; null reads as the
+    epoch."""
+    us = np.asarray(times.to_numpy(), dtype="datetime64[us]")
+    us = np.where(np.isnat(us), np.datetime64(0, "us"), us)
+    return [s.rstrip("0").rstrip(".") + "Z"
+            for s in np.datetime_as_string(us, unit="us").tolist()]
+
+
+def _typed_bytes(values, schema) -> list[bytes]:
+    """Schema-encoded bytes of datums of one schema (an Arrow column):
+    fixed-width scalars packed by numpy in one pass, everything else
+    through encode_python."""
+    import pyarrow as pa
+
+    from fossil_spark.encoding import _FIXED_FMT, encode_python
+
+    fmt = _FIXED_FMT.get(schema.text)
+    t = values.type
+    if (fmt is not None and values.null_count == 0
+            and (pa.types.is_integer(t) or pa.types.is_floating(t)
+                 or pa.types.is_boolean(t))):
+        dtype = np.dtype("<" + fmt)
+        buf = values.to_numpy().astype(dtype).tobytes()
+        w = dtype.itemsize
+        return [buf[k:k + w] for k in range(0, len(buf), w)]
+    return [encode_python(v, schema) for v in values.to_pylist()]
+
+
+def _query_entries(table, reg, raw_dump: bool) -> list[str]:
+    """Wire entries of a QUERY result (an Arrow table), as the
+    reference serializes them: RFC3339Nano \\t topic \\t base64(data)
+    \\t schema (database/result.go Entry.ToString).
+
+    A raw dump (no pipeline) of a typed topic carries the
+    schema-encoded bytes, exactly what the reference returns (it
+    base64s e.Data; the client decodes per schema for display).
+    Pipeline outputs are engine-typed values, not topic-schema datums:
+    they travel as text labeled string, str() of the value
+    DataFrame.collect() returns. Columns are read as Row.asDict() reads
+    them: a repeated name keeps its first position and last value."""
+    import pyarrow as pa
+
+    n = table.num_rows
+    cols = {name: i for i, name in enumerate(table.column_names)}
+    ti, pi = cols.pop("time", None), cols.pop("topic", None)
+    times = _rfc3339(table.column(ti)) if ti is not None else ["1970-01-01T00:00:00Z"] * n
+    topics = ([t or "/" for t in table.column(pi).to_pylist()]
+              if pi is not None else ["/"] * n)
+    vals = [table.column(i) for i in cols.values()]
+    data: list[bytes | None] = [None] * n
+    labels = ["string"] * n
+    if raw_dump and len(vals) == 1:
+        codes = pa.array(topics).dictionary_encode()
+        by_schema: dict[str, tuple] = {}
+        for k, topic in enumerate(codes.dictionary.to_pylist()):
+            schema = reg.get(topic) if topic != "/" else None
+            if schema is not None and schema.text != "string":
+                by_schema.setdefault(schema.text, (schema, []))[1].append(k)
+        codes = codes.indices.to_numpy()
+        for schema, ks in by_schema.values():
+            idx = np.flatnonzero(np.isin(codes, ks))
+            if len(idx) == n:  # one schema for the whole result
+                data, labels = _typed_bytes(vals[0], schema), [schema.text] * n
+                break
+            for i, raw in zip(idx.tolist(), _typed_bytes(vals[0].take(idx), schema)):
+                data[i], labels[i] = raw, schema.text
+    if None in data:
+        from pyspark.sql import Row
+
+        # Arrow reads a struct as a dict, collect() as a Row; the other
+        # values FQL outputs read the same both ways
+        py = [[None if v is None else Row(**v) for v in col.to_pylist()]
+              if pa.types.is_struct(col.type) else col.to_pylist()
+              for col in vals]
+        for i in range(n):
+            if data[i] is None:
+                datum = (str(py[0][i]) if len(py) == 1
+                         else "(" + ", ".join(str(p[i]) for p in py) + ")")
+                data[i] = datum.encode()
+    return [f"{t}\t{topic}\t{base64.b64encode(raw).decode()}\t{label}"
+            for t, topic, raw, label in zip(times, topics, data, labels)]
 
 
 def _parse_rfc3339(s: str) -> datetime:
@@ -492,64 +570,34 @@ class FossilServer:
         return current
 
     def _run_query(self, db: _Database, text: str) -> list[str]:
-        """Execute FQL and serialize entries as the reference does:
-        RFC3339Nano \\t topic \\t base64(data) \\t schema
-        (database/result.go Entry.ToString)."""
+        """Execute FQL and serialize the entries (_query_entries). The
+        text is parsed once; the plan build runs no Spark job on a
+        store that has been read before (EventStore._scan), and the
+        result is one Spark job collected as Arrow and encoded in bulk,
+        with no Row per entry."""
         db.flush()
         if db.is_empty():
             return []
+        from fossil_spark.fql import parse
+
+        q = parse(text)
+        reg = db._registry()
         # reference parity: a query scoped to a topic with a declared
         # schema decodes datum through that schema before the pipeline
         # (types/value.go MakeFromEntry); otherwise the compiler's
         # type-directed coercion handles bare numerics
-        from fossil_spark.encoding import encode_python
-        from fossil_spark.fql import parse
-
-        q = parse(text)
-        topic = q.topic
-        has_pipeline = bool(q.pipeline)
-        if topic and db.store.schema_for_topic(topic).text != "string":
-            out = db.store.query_typed(text, topic, now=self._now)
+        schema = reg.get(q.topic) if q.topic else None
+        if schema is not None and schema.text != "string":
+            out = db.store.query_typed(q, q.topic, now=self._now, schema=schema)
         else:
-            out = db.store.query(text, now=self._now)
+            out = db.store.query(q, now=self._now)
         # reference parity: entries stream back in time order
         # (db.go Retrieve walks segments chronologically)
         if "time" in out.columns:
             order = ["time"] + (["topic"] if "topic" in out.columns else [])
             out = out.orderBy(*order)
-        rows = out.limit(self.max_query_rows).collect()
-        reg = db.store._load_registry()
-        out = []
-        for r in rows:
-            d = r.asDict()
-            t = d.pop("time", None) or datetime(1970, 1, 1)
-            topic = d.pop("topic", None) or "/"
-            vals = list(d.values())
-            schema = reg.get(topic) if topic != "/" else None
-            if (schema is not None and schema.text != "string"
-                    and not has_pipeline and len(vals) == 1):
-                # raw entry dump of a typed topic: the wire carries the
-                # schema-encoded BYTES, base64'd — exactly what the
-                # reference returns (result.go Entry.ToString b64's
-                # e.Data; the client decodes per schema for display)
-                raw = encode_python(vals[0], schema)
-                schema_text = schema.text
-            else:
-                # pipeline outputs are engine-typed values, not topic-
-                # schema datums: serialize as text, labeled string
-                datum = (
-                    str(vals[0]) if len(vals) == 1
-                    else "(" + ", ".join(str(v) for v in vals) + ")"
-                )
-                raw = datum.encode()
-                schema_text = "string"
-            out.append(
-                "\t".join((
-                    _rfc3339(t), topic,
-                    base64.b64encode(raw).decode(), schema_text,
-                ))
-            )
-        return out
+        table = out.limit(self.max_query_rows).toArrow()
+        return _query_entries(table, reg, raw_dump=not q.pipeline)
 
     # -- lifecycle ----------------------------------------------------------
     def start(self) -> "FossilServer":

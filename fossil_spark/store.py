@@ -38,6 +38,10 @@ class EventStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        # the parquet schema, read from the files by the first read of
+        # a non-empty store; append() always writes the same columns,
+        # so later reads pass it and skip Spark's inference job
+        self._schema = None
 
     # -- topic schemas (CREATE <topic> <schema> — docs/schema.md) ----------
     @property
@@ -105,6 +109,10 @@ class EventStore:
         parquet write is the batch's only job."""
         from fossil_spark.schema import SchemaError, conforms
 
+        # createDataFrame reads a naive datetime as host-local time;
+        # every caller passes naive UTC
+        rows = [(t.replace(tzinfo=timezone.utc) if t.tzinfo is None else t, topic, value)
+                for t, topic, value in rows]
         if os.path.exists(self._schema_path):
             reg = self._load_registry()
             schemas = {t: reg.get(t) for t in {t for _, t, _ in rows}}
@@ -117,27 +125,41 @@ class EventStore:
                     )
         self.append(self.spark.createDataFrame(rows, "time timestamp, topic string, value string"))
 
-    def query_typed(self, text: str, topic: str, now: datetime | None = None) -> DataFrame:
+    def query_typed(self, query, topic: str, now: datetime | None = None,
+                    schema=None) -> DataFrame:
         """Query a topic subtree with its declared schema applied: the
         raw string datum parses into the schema's Spark type before the
         FQL pipeline runs, so arithmetic is properly typed (the
-        reference's MakeFromEntry path, types/value.go:98)."""
-        from fossil_spark.fql import fql
+        reference's MakeFromEntry path, types/value.go:98). `query` is
+        FQL text or its parsed AST; `schema` defaults to the topic's
+        registered one."""
+        from fossil_spark.fql import compile_query, parse
         from fossil_spark.schema import validate
 
-        schema = self.schema_for_topic(topic)
-        src = self._read_pruned(text, now).filter(F.col("topic").startswith(topic))
+        q = parse(query) if isinstance(query, str) else query
+        schema = schema or self.schema_for_topic(topic)
+        src = self._read_pruned(q, now).filter(F.col("topic").startswith(topic))
         if schema.text != "string":
             src = (
                 validate(src, schema)
                 .filter(F.col("valid"))
                 .select("time", "topic", F.col("parsed").alias("value"))
             )
-        return fql(src, text, now=now)
+        return compile_query(q, src, now=now)
 
     # -- read / QUERY --------------------------------------------------------
+    def _scan(self) -> DataFrame:
+        """The store's parquet with its `date` partition column. Only
+        the first read infers the schema (a Spark job); it is kept, and
+        a read that fails keeps nothing."""
+        if self._schema is None:
+            df = self.spark.read.parquet(self.root)
+            self._schema = df.schema
+            return df
+        return self.spark.read.schema(self._schema).parquet(self.root)
+
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.root).select("time", "topic", "value")
+        return self._scan().select("time", "topic", "value")
 
     def _read_pruned(self, query, now: datetime | None) -> DataFrame:
         """Store scan with partition pruning derived from the query's
@@ -146,10 +168,12 @@ class EventStore:
         and every footer opened; deriving the redundant `date` bounds
         here turns since/before/between into PartitionFilters — the
         distributed analogue of the reference's per-segment head-time
-        binary search (db.go:554 Retrieve)."""
+        binary search (db.go:554 Retrieve). `query` is FQL text or its
+        parsed AST. After the store's first read the scan carries the
+        kept schema, so building this DataFrame runs no Spark job."""
         from fossil_spark.fql.compiler import time_bounds
 
-        src = self.spark.read.parquet(self.root)
+        src = self._scan()
         lo, hi = time_bounds(query, now=now)
         if lo is not None:
             src = src.filter(F.col("date") >= F.lit(lo.date()))
@@ -157,10 +181,12 @@ class EventStore:
             src = src.filter(F.col("date") <= F.lit(hi.date()))
         return src.select("time", "topic", "value")
 
-    def query(self, text: str, now: datetime | None = None) -> DataFrame:
+    def query(self, query, now: datetime | None = None) -> DataFrame:
+        """FQL over the store; `query` is FQL text or its parsed AST."""
         from fossil_spark.fql import compile_query, parse
 
-        q = parse(text)  # parse once: pruning and compilation share the AST
+        # parse once: pruning and compilation share the AST
+        q = parse(query) if isinstance(query, str) else query
         return compile_query(q, self._read_pruned(q, now), now=now)
 
     def save_bucketed(

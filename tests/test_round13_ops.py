@@ -434,9 +434,26 @@ def test_cosine_topk_engines_bit_identical(spark):
             )
         )
 
-    arrow = rows("arrow")
-    for variant in (rows("hof"), rows("hof", dim=6)):
-        assert len(arrow) == len(variant)
-        for x, y in zip(arrow, variant):
+    def assert_same(x_rows, y_rows):
+        assert len(x_rows) == len(y_rows)
+        for x, y in zip(x_rows, y_rows):
             assert x[:2] == y[:2] and x[3] == y[3]
             assert struct.pack("d", x[2]) == struct.pack("d", y[2])
+
+    arrow = rows("arrow")
+    for variant in (rows("hof"), rows("hof", dim=6)):
+        assert_same(arrow, variant)
+
+    # ragged corpus: the HOF path scores only equal-width pairs, so each
+    # query ranks the vectors of its own width, whatever the partition
+    # order puts first in an Arrow group
+    short = [[math.cos(i * 0.3 + d) * (i + 1) for d in range(3)] for i in range(12)]
+    emb = emb.unionByName(spark.createDataFrame(
+        [(100 + i, v) for i, v in enumerate(short)],
+        "vec_id long, embedding array<double>",
+    )).repartition(3)
+    q = emb.filter("vec_id IN (0, 5, 100, 107)")
+    arrow = rows("arrow")
+    assert {r[0] for r in arrow} == {0, 5, 100, 107}
+    assert all((r[0] >= 100) == (r[1] >= 100) for r in arrow)
+    assert_same(arrow, rows("hof"))
